@@ -32,6 +32,15 @@ object SparkEntry {
     * because (user_id, ts) is unique in the generated events.
     */
   private val svOver = OracleGen.over(Seq("user_id"), Seq("epoch_us(ts)"))
+  /** A double rounded half-up to 4dp as floor(x·10⁴ + 0.5)/10⁴ — the
+    * identical FP ops on both engines. round(x, 4) is not: Spark rounds
+    * the shortest decimal form, DuckDB the binary value, so a score
+    * like 0.65875 (a double just below the tie) splits 0.6588/0.6587.
+    */
+  private def q4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    floor(c * 1.0E4 + 0.5) / 1.0E4
+  /** DuckDB twin of [[q4]]. */
+  private def q4Sql(x: String): String = s"(floor(($x) * 1.0E4 + 0.5E0) / 1.0E4)"
   /** Flagship: the complete featurize_data surface (fused window block
     * + domfreq scan) on sf0.001 events.
     */
@@ -1297,7 +1306,7 @@ object SparkEntry {
       val scored = docs.select(col("doc_id"),
         TextOps.h60(TextOps.normalize(col("text"))).as("__k"),
         TextOps.langid(toks).as("lang_pred"),
-        round(TextOps.qualityScore(col("text")), 4).as("quality"),
+        q4(TextOps.qualityScore(col("text"))).as("quality"),
         TextOps.tokenCount(col("text")).as("n_tokens"))
       // dup verdict via partial-agg groupBy + join back, NOT a window
       // on the content hash: a 10⁹-duplicate page would pin one
@@ -1621,10 +1630,10 @@ object SparkEntry {
           graft.functions.VectorOps.lshBucket(array((0 until 8).map(j => col(s"e$j")): _*), mmPlanes))
         .orderBy("doc_id")
     },
-    // multi-column pipeline: every (column, window) rollmean shares ONE
-    // collect_list frame + ONE MultiRollKernel pass (the lags/leads ride
-    // the same Window operator) — the fused-block scale shape for
-    // pipelines over several value columns
+    // multi-column pipeline: every (column, window) rollmean folds in its
+    // own frame-fold aggregate, and all of them plus the lags/leads ride
+    // ONE Window operator — the fused-block scale shape for pipelines
+    // over several value columns
     "ts_pipeline_multi" -> { (s, dir) =>
       val ev = Tables.events(s, dir).select(col("user_id"), col("ts_us"), col("event_id"),
         col("value"), (col("value") * lit(1.7) + length(col("event_type")).cast("double")).as("v2"))
@@ -1932,7 +1941,7 @@ object SparkEntry {
         .groupBy(col("__gk")).agg(min(col("doc_id")).as("__min_id"))
       val kept1 = scored.join(groups, col("__k") === col("__gk"))
         .where(col("__min_id") === col("doc_id") && col("__lang") === "en" &&
-          round(col("__q"), 4) >= 0.5 && col("__nt") >= 10)
+          q4(col("__q")) >= 0.5 && col("__nt") >= 10)
         .select("doc_id", "text")
       // stage 2: minhash near-dup purge over the curated survivors
       val kept = kept1
@@ -2426,7 +2435,7 @@ object SparkEntry {
        |  select doc_id, text,
        |    ${graft.functions.SqlTwins.h60(graft.functions.SqlTwins.norm("text"))} as k,
        |    ${graft.functions.SqlTwins.langidSelect("text")} as lang_pred,
-       |    round(${graft.functions.SqlTwins.qualityScore("text")}, 4) as quality,
+       |    ${q4Sql(graft.functions.SqlTwins.qualityScore("text"))} as quality,
        |    cast(len(${graft.functions.SqlTwins.toks("text")}) as int) as n_tokens
        |  from documents),
        |kept1 as (
@@ -4816,7 +4825,7 @@ object SparkEntry {
          |  select doc_id,
          |    ${SqlTwins.h60(SqlTwins.norm("text"))} as k,
          |    ${SqlTwins.langidSelect("text")} as lang_pred,
-         |    round(${SqlTwins.qualityScore("text")}, 4) as quality,
+         |    ${q4Sql(SqlTwins.qualityScore("text"))} as quality,
          |    cast(len(${SqlTwins.toks("text")}) as int) as n_tokens
          |  from documents),
          |d as (

@@ -496,21 +496,10 @@ object Dedup {
     // the cache each consumer re-runs the md5-per-token kernel — a
     // measured 22 s per re-evaluation at sf0.1 vs ~1 s from cache.
     // Blocks are freed by the ContextCleaner when the frame is GC'd.
-    // storage level A/B knob (r22, judge item 5): MEMORY_AND_DISK_SER
-    // trades per-read deserialization CPU for the on-heap size of a
-    // fat array cache. Measured on this host (ABAB isolated runs,
-    // 5 cold-cache reps each, 32 cores, sf0.1): deserialized medians
-    // [2.607, 2.195] vs serialized [2.487, 2.150] — serialized led in
-    // every pairing but only by 2-4%, inside the host band: a WASH
-    // locally (the gram arrays are primitive longs, so the object
-    // overhead the judge suspected is already small). Default stays
-    // deserialized; the knob documents the cluster-side alternative
-    // where cache MEMORY (not CPU) is the contended resource.
-    val shLevel =
-      if (docs.sparkSession.conf.getOption("spark.graft.containment.serCache")
-        .orElse(sys.env.get("SPARK_GRAFT_CONTAIN_SER")).exists(_.toBoolean))
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // Deserialized, not _SER: r22 ABAB runs (sf0.1, 32 cores) measured
+    // the serialized cache within 2-4% — the gram arrays are primitive
+    // longs, so there is little object overhead to save.
+    val shLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val withSh = docs
       .select(col(idCol), TextOps.tokenHashes32Kernel(col(textCol)).as("__th"))
       .select(col(idCol),
@@ -523,7 +512,6 @@ object Dedup {
       .where(col("__freq") <= maxShingleFreq)
       .select(col("__g"))
     // persisted for the same reason: the self-join scans it twice
-    // (same storage-level knob as the gram arrays above)
     val filtered = grams.join(rare, Seq("__g"), "left_semi")
       .persist(shLevel)
     val shared = filtered.as("a").join(filtered.as("b"),
@@ -851,8 +839,10 @@ object Dedup {
     // k× fewer jobs + materializations (see connectedComponentsStar).
     val cadence =
       if (checkpointEvery >= 1) checkpointEvery
-      else docs.sparkSession.conf
-        .getOption("spark.graft.clusters.checkpointEvery").map(_.toInt).getOrElse(1)
+      else docs.sparkSession.conf.getOption("spark.graft.clusters.checkpointEvery")
+        .map(graft.GraftConf.parse("spark.graft.clusters.checkpointEvery", _,
+          "an integer >= 1")(_.toIntOption.filter(_ >= 1)))
+        .getOrElse(1)
     val sig = minhashSignatures(docs, idCol, textCol, shingleSize, TextOps.minhashParams(k))
     val bands = lshBands(sig, idCol, k, rowsPerBand)
     val bw = Window.partitionBy("band_idx", "band_key")

@@ -297,6 +297,20 @@ object Profile {
     * engines disagree on NaN sort semantics); −0.0 orders just below
     * +0.0 (numerically equal — either pick compares equal).
     */
+  /** The radix digit plan: `spark.graft.radix.bits` (alias
+    * SPARK_GRAFT_RADIX_BITS), default 22,22,20 — see radixSelect.
+    */
+  private[graft] def radixWidths(spark: org.apache.spark.sql.SparkSession): Seq[Int] =
+    spark.conf.getOption("spark.graft.radix.bits").map("spark.graft.radix.bits" -> _)
+      .orElse(sys.env.get("SPARK_GRAFT_RADIX_BITS").map("SPARK_GRAFT_RADIX_BITS" -> _))
+      .map { case (key, raw) =>
+        graft.GraftConf.parse(key, raw, "comma-separated digit widths, each in [1,24], summing to 64") {
+          v => Some(v.split(",").toSeq.map(_.trim.toInt))
+            .filter(ws => ws.sum == 64 && ws.forall(w => w >= 1 && w <= 24))
+        }
+      }
+      .getOrElse(Seq(22, 22, 20))
+
   /** Shared core of the radix rank selectors: given rows keyed as
     * (__g string group, __u bias-shifted order-preserving int64 key)
     * and a distinct set of (group, 1-based rank) targets, runs the
@@ -333,12 +347,7 @@ object Profile {
     // collects exactly ONE row per target per round; group cardinality
     // is already driver-bounded by the callers (maxGroups). The 4×16
     // plan remains available for memory-starved executors.
-    val widths: Seq[Int] = spark.conf.getOption("spark.graft.radix.bits")
-      .orElse(sys.env.get("SPARK_GRAFT_RADIX_BITS"))
-      .map(_.split(",").toSeq.map(_.trim.toInt))
-      .getOrElse(Seq(22, 22, 20))
-    require(widths.nonEmpty && widths.sum == 64 && widths.forall(w => w >= 1 && w <= 24),
-      s"radix digit widths must sum to 64 with each in [1,24]: $widths")
+    val widths = radixWidths(spark)
     val ids = targets.distinct
     // per target: (remaining rank within its prefix-matched set, prefix)
     val st: Array[(Long, Long)] = ids.map(t => (t._2, 0L)).toArray

@@ -9,25 +9,24 @@ import org.apache.spark.sql.types._
 
 /** Frame-fold AGGREGATE kernels (r21): the sliding-window loess /
   * rolling-Theil-Sen fits computed directly INSIDE a
-  * TypedImperativeAggregate over a primitive double buffer, replacing
-  * the collect_list → scalar-kernel two-step.
+  * TypedImperativeAggregate over a primitive double buffer, instead of
+  * a collect_list frame handed to a scalar kernel expression.
   *
   * Why: window collect_list pays, per (output row × frame row), one
   * boxed append into an ArrayBuffer[Any] (Spark's Collect buffers
   * box primitives) plus, per output row, the list's GenericArrayData
-  * materialization, its UnsafeRow conversion, and only THEN the fused
-  * kernel's fold. These aggregates keep the frame in one interleaved
+  * materialization, its UnsafeRow conversion, and only THEN a kernel
+  * fold. These aggregates keep the frame in one interleaved
   * double[] (zero boxing, zero per-row allocation), and eval() IS the
   * fold — the window emits the final double and nothing else.
   *
   * EXACTNESS: update() sees the frame rows in frame order (WindowExec
-  * feeds sliding frames in row order), the fold arithmetic is the
-  * byte-for-byte body of the corresponding KernelRuntime scalar
-  * kernel, and the null/edge verdict is structural: `n` counts EVERY
-  * frame row while `nullSeen` latches any null input, so
-  * (n ≠ taps || nullSeen) ⇔ the collect_list form's clipped-frame /
-  * null-element NULL. StlSpec / RollTheilSenSpec pin the aggregate,
-  * scalar-kernel, and declarative-fold forms bit-equal.
+  * feeds sliding frames in row order), the fold is the corresponding
+  * KernelRuntime `*Flat` body, and the null/edge verdict is
+  * structural: `n` counts EVERY frame row while `nullSeen` latches any
+  * null input, so (n ≠ taps || nullSeen) ⇔ the lag/lead chain's
+  * clipped-frame / null-tap NULL. StlSpec / RollTheilSenSpec pin the
+  * aggregates against the declarative folds and a brute-force slope.
   *
   * ORDER CONTRACT: these aggregates are only meaningful over an
   * ORDERED window frame (the fold is order-sensitive). They must not
@@ -197,32 +196,18 @@ case class RollTheilSenAgg(
     copy(t = newChildren(0), v = newChildren(1))
 }
 
-/** Primitive window-frame COLLECTORS (r21 batch 2): `collect_list`
-  * minus the boxing, for frames whose consumer is a scalar kernel
-  * expression (TaylorKernel / RollFoldKernel / MultiRollKernel) that
-  * reads the array through the ArrayData interface.
+/** Primitive window-frame COLLECTOR (r21 batch 2): `collect_list`
+  * minus the boxing, for the one frame whose consumer is a scalar
+  * kernel expression — the centered [[TaylorKernel]], whose branch
+  * select reads pos/rpos, which a frame aggregate cannot see.
   *
-  * Semantics are exactly CollectList's: null inputs are DROPPED (the
-  * compacted-array contract the bare kernels were built on), the
+  * Semantics are exactly CollectList's: null inputs are DROPPED, the
   * result is never null (empty frame → empty array), elements arrive
   * in frame order. The buffer is one growable primitive array —
   * update() never boxes — and eval() is a single
   * `UnsafeArrayData.fromPrimitiveArray` memcpy instead of
   * CollectList's ArrayBuffer[Any] → GenericArrayData → per-element
   * unsafe conversion.
-  *
-  * `sorted = true` additionally sorts the collected values before
-  * emitting — replacing a `sort_array(collect_list(x))` two-step.
-  * EXACTNESS: `java.util.Arrays.sort(double[])` implements the same
-  * total order as Spark's sort_array on doubles (-0.0 < 0.0, NaN
-  * greatest — both resolve to java.lang.Double.compare order; an r21
-  * ADVICE note claimed sort_array leaves -0.0/+0.0 in input order,
-  * but FrameCollectSpec's explicit [0.0, -0.0] case pins the running
-  * engine placing -0.0 strictly first, bit-equal to Arrays.sort), and
-  * long sorting is unambiguous; nulls were dropped before the sort
-  * exactly as collect_list dropped them (ascending sort_array puts
-  * nulls FIRST, but every call site collects a non-null-filtered
-  * frame).
   *
   * The ORDER CONTRACT of [[FrameFoldAgg]] applies: window frames only
   * (WindowExec feeds update() in frame order and never merges); merge
@@ -236,7 +221,6 @@ final class DblFrameState(cap: Int) {
 case class DoubleFrameCollect(
     child: Expression,
     capHint: Int,
-    sorted: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[DblFrameState] {
@@ -266,11 +250,9 @@ case class DoubleFrameCollect(
     a
   }
 
-  override def eval(b: DblFrameState): Any = {
-    val out = java.util.Arrays.copyOf(b.xs, b.n)
-    if (sorted) java.util.Arrays.sort(out)
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override def eval(b: DblFrameState): Any =
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(java.util.Arrays.copyOf(b.xs, b.n))
 
   override def serialize(b: DblFrameState): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(4 + 8 * b.n)
@@ -299,96 +281,23 @@ case class DoubleFrameCollect(
     copy(child = newChildren.head)
 }
 
-final class LngFrameState(cap: Int) {
-  var xs = new Array[Long](cap)
-  var n = 0
-}
-
-/** Long twin of [[DoubleFrameCollect]] (hampel's integer-cents frames). */
-case class LongFrameCollect(
-    child: Expression,
-    capHint: Int,
-    sorted: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[LngFrameState] {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-
-  override def createAggregationBuffer(): LngFrameState =
-    new LngFrameState(math.max(capHint, 4))
-
-  override def update(b: LngFrameState, input: InternalRow): LngFrameState = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (b.n == b.xs.length) b.xs = java.util.Arrays.copyOf(b.xs, b.n * 2)
-      b.xs(b.n) = v.asInstanceOf[Long]
-      b.n += 1
-    }
-    b
-  }
-
-  override def merge(a: LngFrameState, b: LngFrameState): LngFrameState = {
-    if (a.n + b.n > a.xs.length) a.xs = java.util.Arrays.copyOf(a.xs, a.n + b.n)
-    System.arraycopy(b.xs, 0, a.xs, a.n, b.n)
-    a.n += b.n
-    a
-  }
-
-  override def eval(b: LngFrameState): Any = {
-    val out = java.util.Arrays.copyOf(b.xs, b.n)
-    if (sorted) java.util.Arrays.sort(out)
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  override def serialize(b: LngFrameState): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 8 * b.n)
-    bb.putInt(b.n)
-    var i = 0
-    while (i < b.n) { bb.putLong(b.xs(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): LngFrameState = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt()
-    val b = new LngFrameState(math.max(n, 4))
-    var i = 0
-    while (i < n) { b.xs(i) = bb.getLong(); i += 1 }
-    b.n = n
-    b
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): LongFrameCollect =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): LongFrameCollect =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): LongFrameCollect =
-    copy(child = newChildren.head)
-}
-
 /** Frame-fold KERNEL aggregates (r22, the StlLoessFitAgg pattern with N
   * outputs): the roll-family / trailing-Taylor kernels computed
   * directly inside a TypedImperativeAggregate over one interleaved
   * primitive double[] — eval() IS the kernel fold and emits the final
-  * output array. This removes the two-step's remaining per-output-row
-  * work: the collector's frame copy + UnsafeArrayData materialization
-  * and the scalar kernel's ArrayData re-read.
+  * output array. A collector frame + scalar kernel would pay, per
+  * output row, the frame copy + UnsafeArrayData materialization and
+  * the kernel's ArrayData re-read.
   *
   * ENCODING: every child is NaN-ENCODED (`coalesce(x, NaN)` — never
   * null), so rows keep their POSITION in the buffer and the folds skip
-  * NaN exactly like the wrapped-frame kernels skip null slots. These
+  * NaN exactly like the declarative forms skip null terms. These
   * are the lag/lead expression forms' — and therefore the DuckDB
   * oracles' — exact semantics (a genuine NaN value is missing too:
-  * pandas semantics, the same NaN-as-missing contract every frame
-  * encoding shares). Note this is the POSITIONAL contract: the
-  * compacted bare collector reached further back past dropped nulls;
-  * the declarative forms never did. FrameKernelAggSpec pins the
-  * aggregates bit-equal to the useKernel=false declarative folds on
-  * null-bearing input.
+  * pandas semantics). This is the POSITIONAL contract: a null row
+  * holds its place in the window, as in the declarative forms.
+  * FrameKernelAggSpec pins the aggregates bit-equal to the
+  * useKernel=false declarative folds on null-bearing input.
   *
   * The [[FrameFoldAgg]] ORDER CONTRACT applies: ordered window frames
   * only (WindowExec feeds update() in frame order and never merges);
@@ -459,12 +368,12 @@ abstract class FlatFrameAgg extends TypedImperativeAggregate[FlatFrameState] {
   }
 }
 
-/** The whole [[MultiRollKernel]] feature family as ONE window
-  * aggregate: children are the NaN-encoded source columns (arity ≥ 1),
-  * eval() runs [[KernelRuntime.multiRollFlat]] — identical per-mode
-  * folds, zero frame materialization. Caller contract: trailing frames
-  * only (rowsBetween(-(depth−1), 0)), the current row is the buffer's
-  * last row.
+/** A whole roll-feature family (any mix of [[RollSpecDef]] modes,
+  * columns and window sizes) as ONE window aggregate: children are the
+  * NaN-encoded source columns (arity ≥ 1), eval() runs
+  * [[KernelRuntime.multiRollFlat]] — zero frame materialization.
+  * Caller contract: trailing frames only (rowsBetween(-(depth−1), 0)),
+  * the current row is the buffer's last row.
   */
 case class MultiRollAgg(
     children: Seq[Expression],
@@ -522,13 +431,17 @@ case class TaylorTrailingAgg(
     copy(child = newChildren.head)
 }
 
-/** Sorted-pick frame aggregates (r22): the `collectSorted* →
-  * element-pick projection` two-steps of rollQuantiles / hampel as ONE
+/** Sorted-pick frame aggregates (r22): the `sort_array(collect_list)
+  * → element-pick` two-steps of rollQuantiles / hampel as ONE
   * aggregate whose eval() sorts a primitive copy and emits just the
   * picked elements — the sorted frame array is never materialized as a
-  * row value. Null inputs are DROPPED exactly like the collectors
+  * row value. Null inputs are DROPPED exactly like collect_list
   * (sorting makes position irrelevant); picks past the collected count
-  * are null (the `get()`/cnt-gate semantics of the call sites). The
+  * are null (the `get()`/cnt-gate semantics of the call sites).
+  * `java.util.Arrays.sort(double[])` is the total order sort_array
+  * applies (-0.0 < 0.0, NaN greatest: java.lang.Double.compare order);
+  * FrameCollectSpec pins both aggregates against sort_array on NaN,
+  * signed zeros, an explicit [0.0, -0.0] frame and nullable longs. The
   * [[FrameFoldAgg]] window-only ORDER CONTRACT applies.
   */
 case class DoubleSortedPicksAgg(
@@ -565,7 +478,7 @@ case class DoubleSortedPicksAgg(
 
   override def eval(b: DblFrameState): Any = {
     val s = java.util.Arrays.copyOf(b.xs, b.n)
-    java.util.Arrays.sort(s) // same total order as sort_array (FrameCollectSpec pin)
+    java.util.Arrays.sort(s) // same total order as sort_array (see the class doc)
     val out = new Array[Any](ranks.length)
     var i = 0
     while (i < ranks.length) {
@@ -603,12 +516,17 @@ case class DoubleSortedPicksAgg(
     copy(child = newChildren.head)
 }
 
+final class LngFrameState(cap: Int) {
+  var xs = new Array[Long](cap)
+  var n = 0
+}
+
 /** Hampel's per-frame [median, MAD] over integer cents as ONE
   * aggregate: eval() sorts the collected longs once for the median,
-  * then sorts the absolute deviations for the MAD — fusing the former
-  * collectSortedLongs window + per-row transform/array_sort projection
-  * (an O(w log w) sort + two array allocations per row) into the
-  * aggregate. Element picks use `get()` semantics: index k out of
+  * then sorts the absolute deviations for the MAD — what a
+  * sort_array(collect_list) window + per-row transform/array_sort
+  * projection computes, without that shape's two array allocations
+  * per row. Element picks use `get()` semantics: index k out of
   * bounds → null.
   */
 case class HampelMedMadAgg(
@@ -686,15 +604,6 @@ case class HampelMedMadAgg(
 object FrameAggKernels {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
-  /** r22 A/B escape hatch for the frame-fold kernel aggregates
-    * (MultiRollAgg / TaylorTrailingAgg): `spark.graft.frameAgg=false`
-    * (or SPARK_GRAFT_FRAME_AGG=false) restores the collector + scalar
-    * kernel two-step at every converted call site. Default ON.
-    */
-  def aggEnabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.frameAgg")
-      .orElse(sys.env.get("SPARK_GRAFT_FRAME_AGG")).forall(_.toBoolean)
-
   def conv(v: Column, coefs: Array[Double]): Column =
     column(StlConvAgg(expression(v), coefs).toAggregateExpression())
 
@@ -704,14 +613,6 @@ object FrameAggKernels {
     */
   def collectDoubles(v: Column, capHint: Int): Column =
     column(DoubleFrameCollect(expression(v), capHint).toAggregateExpression())
-
-  /** sort_array(collect_list(double)) as ONE primitive pass. */
-  def collectSortedDoubles(v: Column, capHint: Int): Column =
-    column(DoubleFrameCollect(expression(v), capHint, sorted = true).toAggregateExpression())
-
-  /** sort_array(collect_list(long)) as ONE primitive pass. */
-  def collectSortedLongs(v: Column, capHint: Int): Column =
-    column(LongFrameCollect(expression(v), capHint, sorted = true).toAggregateExpression())
 
   def loessFit(rho: Column, v: Column,
       w0: Array[Double], w1: Array[Double], w2: Array[Double]): Column =
@@ -733,7 +634,7 @@ object FrameAggKernels {
   }
 
   /** Ascending-sort element picks (1-based ranks) in one aggregate —
-    * fuses `collectSortedDoubles + element_at` (rollQuantiles).
+    * fuses `sort_array(collect_list) + element_at` (rollQuantiles).
     */
   def sortedPicksAgg(v: Column, ranks: Seq[Int], capHint: Int): Column =
     column(DoubleSortedPicksAgg(expression(v), ranks.toArray, capHint)

@@ -47,10 +47,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftFunctions.inject(e)
     // opt-in range-join rewrite: fires only when the session sets
     // spark.graft.rangeJoin.bucketMicros (see RewriteRangeJoin)
-    e.injectOptimizerRule { session =>
-      RewriteRangeJoin(() =>
-        session.conf.getOption("spark.graft.rangeJoin.bucketMicros")
-          .flatMap(v => scala.util.Try(v.toLong).toOption))
-    }
+    e.injectOptimizerRule(session => RewriteRangeJoin(() => RewriteRangeJoin.bucketMicros(session)))
   }
 }

@@ -3,34 +3,43 @@ package graft.plans
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
 /** Runtime bodies of the custom kernels, hoisted out of the Expression
-  * classes so that generated (whole-stage codegen) Java can call them as
-  * plain static methods: a top-level Scala object compiles to a class
-  * with static forwarders, so janino sees
-  * `graft.plans.KernelRuntime.multiRoll(...)`.
+  * and aggregate classes so that generated (whole-stage codegen) Java
+  * can call them as plain static methods: a top-level Scala object
+  * compiles to a class with static forwarders, so janino sees
+  * `graft.plans.KernelRuntime.taylor(...)`.
   *
-  * This is what replaces CodegenFallback for the hot kernels: the child
-  * expression is evaluated by generated code (no interpreted tree walk,
-  * no boxing of the input), and the per-row work is ONE JIT-compiled
-  * static call. These are the ONLY copies of the kernel loops — the
-  * Expressions' `nullSafeEval` and their `doGenCode` output both call
-  * here, so interpreted and codegen paths are bit-identical by
-  * construction (RollKernelSpec / TextHashKernelSpec pin parity with
-  * the declarative Column forms).
+  * This is what replaces CodegenFallback for the hot scalar kernels:
+  * the child expression is evaluated by generated code (no interpreted
+  * tree walk, no boxing of the input), and the per-row work is ONE
+  * JIT-compiled static call. These are the ONLY copies of the kernel
+  * loops — the Expressions' `nullSafeEval` and their `doGenCode` output
+  * both call here, so interpreted and codegen paths are bit-identical
+  * by construction (CodegenWiringSpec pins it). The `*Flat` bodies are
+  * the folds of the frame-fold window aggregates in
+  * [[FrameAggKernels]], over the primitive buffer the aggregate filled
+  * in frame order (FrameKernelAggSpec, StlSpec and RollTheilSenSpec pin
+  * them against the declarative Column forms).
   */
 object KernelRuntime {
   private val D = java.lang.Double.valueOf(_: Double)
 
-  /** See [[MultiRollKernel]] for the frame/NULL contract. `futureLen` =
-    * number of FUTURE rows present in the frame at this row (0 for a
-    * trailing frame; min(rpos, frameHi) when the frame is shared with
-    * centered taylor specs and extends `frameHi` rows ahead) — the
-    * current row sits at index n - 1 - futureLen and every trailing
-    * fold ends there.
+  /** The roll-family folds of [[MultiRollAgg]] (modes: see
+    * [[RollSpecDef]]) over one interleaved primitive double[] the
+    * aggregate buffered in frame order — no frame array is ever
+    * materialized. Row i's column c sits at xs(i·arity+c); null source
+    * values were ENCODED as NaN at update(), so rows keep their
+    * POSITION and every fold skips NaN terms — the lag/lead expression
+    * forms' and the DuckDB oracles' semantics (a genuine NaN value is
+    * missing too: pandas semantics). Each spec folds over only its own
+    * trailing `min(depth, n)` rows ending at the current row, so specs
+    * of different depths share one buffer bit-exactly. `futureLen` =
+    * number of FUTURE rows present in the buffer (0 for the trailing
+    * frames every caller uses); the current row sits at index
+    * nRows − 1 − futureLen.
     */
-  def multiRoll(xs: ArrayData, futureLen: Int, specs: Array[RollSpecDef], bare: Boolean,
-      nanNull: Boolean): ArrayData = {
-    val n = xs.numElements()
-    val end = n - 1 - futureLen // index of the current row inside the frame
+  def multiRollFlat(xs: Array[Double], nRows: Int, arity: Int, futureLen: Int,
+      specs: Array[RollSpecDef]): ArrayData = {
+    val end = nRows - 1 - futureLen // index of the current row inside the frame
     var totalOut = 0
     var t = 0
     while (t < specs.length) { totalOut += specs(t).nOut; t += 1 }
@@ -42,24 +51,8 @@ object KernelRuntime {
       val c = sp.colIdx
       val avail = math.max(0, math.min(sp.depth, end + 1))
       val start = end + 1 - avail
-      // wrapped frame: elements are arrays of column casts (null slot =
-      // null source value, row keeps its position). bare + !nanNull:
-      // plain doubles from a single column — collect_list has already
-      // dropped nulls, i.e. the original RollFoldKernel contract (the
-      // builder only uses it when every spec's depth equals the frame
-      // depth, so the compacted array IS the spec's whole window).
-      // bare + nanNull: plain doubles where null was ENCODED as NaN
-      // before collect_list (coalesce(x, NaN)), so rows keep their
-      // position like the wrapped frame but cost no per-row array —
-      // the single-source-column shared-frame fast path.
-      @inline def nul(i: Int): Boolean =
-        if (!bare) xs.getArray(i).isNullAt(c)
-        else if (nanNull) java.lang.Double.isNaN(xs.getDouble(i))
-        // compacted bare frame: collect_list dropped nulls, but a NaN
-        // VALUE survives collection — treat it as missing too (pandas
-        // semantics; keeps every frame encoding NaN-consistent)
-        else xs.isNullAt(i) || java.lang.Double.isNaN(xs.getDouble(i))
-      @inline def at(i: Int): Double = if (bare) xs.getDouble(i) else xs.getArray(i).getDouble(c)
+      @inline def nul(i: Int): Boolean = java.lang.Double.isNaN(xs(i * arity + c))
+      @inline def at(i: Int): Double = xs(i * arity + c)
       sp.mode match {
         case 0 => // rollmean: newest→oldest sum over non-nulls, gate cnt >= minP
           var acc = 0.0; var cnt = 0; var i = end
@@ -159,11 +152,9 @@ object KernelRuntime {
           out(o) = if (np >= sp.w) D(r) else null
           o += 1
         case 6 => // rolling cross-correlation col[colIdx] vs col[lagK]
-          // a bare frame exists only when ONE source column is in play,
-          // so the "second" column is the same bare element
           val c2 = sp.lagK
-          @inline def nul2(i: Int): Boolean = if (bare) nul(i) else xs.getArray(i).isNullAt(c2)
-          @inline def at2(i: Int): Double = if (bare) at(i) else xs.getArray(i).getDouble(c2)
+          @inline def nul2(i: Int): Boolean = java.lang.Double.isNaN(xs(i * arity + c2))
+          @inline def at2(i: Int): Double = xs(i * arity + c2)
           // shifted Pearson — see case 4 (r16 cancellation fix)
           var np = 0; var sx = 0.0; var sy = 0.0
           var i = 0
@@ -194,180 +185,6 @@ object KernelRuntime {
           // m2/m3/m4 cancel catastrophically at large magnitudes (1e12
           // values: s4 ~ 1e48 — the centered moments drown in noise);
           // Σ(v−mean)^p is exact where the expansion is garbage
-          var s1 = 0.0; var cnt = 0; var i = end
-          while (i >= start) { if (!nul(i)) { s1 += at(i); cnt += 1 }; i -= 1 }
-          if (cnt >= sp.w) {
-            val mean = s1 / cnt
-            var m2s = 0.0; var m3s = 0.0; var m4s = 0.0
-            i = end
-            while (i >= start) {
-              if (!nul(i)) {
-                val d = at(i) - mean
-                val d2 = d * d
-                m2s += d2; m3s += d2 * d; m4s += d2 * d2
-              }
-              i -= 1
-            }
-            val m2 = m2s / cnt
-            val m3 = m3s / cnt
-            val m4 = m4s / cnt
-            out(o) = D(sp.weights(0) * (m3 / (m2 * math.sqrt(m2))))
-            out(o + 1) = D(sp.weights(1) * ((sp.weights(2) * ((m4 / (m2 * m2)) - 3.0)) + 6.0))
-          } else { out(o) = null; out(o + 1) = null }
-          o += 2
-      }
-      s += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Flat-buffer twin of [[multiRoll]] for [[MultiRollAgg]] (r22): the
-    * IDENTICAL per-mode folds over one interleaved primitive double[]
-    * the aggregate buffered in frame order — no frame array is ever
-    * materialized. Encoding is the bareNaN/wrapped POSITIONAL contract
-    * generalized to any arity: row i's column c sits at xs(i·arity+c),
-    * null source values were ENCODED as NaN at update() (so rows keep
-    * their position exactly like the wrapped array frame, and the
-    * folds skip NaN exactly like the wrapped kernels skip null slots —
-    * the lag/lead expression forms' and the DuckDB oracles' semantics).
-    * `futureLen` as in [[multiRoll]] (0 for trailing frames).
-    */
-  def multiRollFlat(xs: Array[Double], nRows: Int, arity: Int, futureLen: Int,
-      specs: Array[RollSpecDef]): ArrayData = {
-    val end = nRows - 1 - futureLen // index of the current row inside the frame
-    var totalOut = 0
-    var t = 0
-    while (t < specs.length) { totalOut += specs(t).nOut; t += 1 }
-    val out = new Array[Any](totalOut)
-    var o = 0
-    var s = 0
-    while (s < specs.length) {
-      val sp = specs(s)
-      val c = sp.colIdx
-      val avail = math.max(0, math.min(sp.depth, end + 1))
-      val start = end + 1 - avail
-      @inline def nul(i: Int): Boolean = java.lang.Double.isNaN(xs(i * arity + c))
-      @inline def at(i: Int): Double = xs(i * arity + c)
-      sp.mode match {
-        case 0 => // rollmean: newest→oldest sum over non-nulls, gate cnt >= minP
-          var acc = 0.0; var cnt = 0; var i = end
-          while (i >= start) { if (!nul(i)) { acc += at(i); cnt += 1 }; i -= 1 }
-          out(o) = if (cnt >= sp.minP) D(acc / cnt) else null
-          o += 1
-        case 1 => // rollstats: min/max/std over non-nulls
-          var s1 = 0.0; var mn = Double.MaxValue; var mx = Double.MinValue
-          var cnt = 0; var i = end
-          while (i >= start) {
-            if (!nul(i)) {
-              val v = at(i)
-              s1 += v
-              if (v < mn) mn = v
-              if (v > mx) mx = v
-              cnt += 1
-            }
-            i -= 1
-          }
-          // shifted two-pass variance — see multiRoll mode 1 (r16)
-          val mean1 = s1 / cnt
-          var s2c = 0.0
-          i = end
-          while (i >= start) {
-            if (!nul(i)) { val d = at(i) - mean1; s2c += d * d }
-            i -= 1
-          }
-          val std = math.sqrt(s2c / (cnt - 1))
-          out(o) = if (cnt >= sp.minP) D(mn) else null
-          out(o + 1) = if (cnt >= sp.minP) D(mx) else null
-          out(o + 2) = if (cnt >= math.max(sp.minP, 2)) D(std) else null
-          o += 3
-        case 2 => // zscore of the current row against its trailing window
-          var s1 = 0.0; var cnt = 0; var i = end
-          while (i >= start) { if (!nul(i)) { s1 += at(i); cnt += 1 }; i -= 1 }
-          out(o) =
-            if (cnt >= sp.w && end >= 0 && !nul(end)) {
-              val x = at(end)
-              val mean = s1 / cnt
-              var s2c = 0.0
-              i = end
-              while (i >= start) {
-                if (!nul(i)) { val d = at(i) - mean; s2c += d * d }
-                i -= 1
-              }
-              val std = math.sqrt(s2c / (cnt - 1))
-              D((x - mean) / std)
-            } else null
-          o += 1
-        case 3 => // truncated EWMA, weights(i) = beta^i newest-first
-          var num = 0.0; var den = 0.0; var i = 0
-          val lim = math.min(sp.w, avail)
-          while (i < lim) {
-            if (!nul(end - i)) {
-              val wi = sp.weights(i)
-              num += wi * at(end - i); den += wi
-            }
-            i += 1
-          }
-          out(o) = D(num / den)
-          o += 1
-        case 4 => // autocorr over trailing pairs, gate nPairs >= w
-          // shifted Pearson — see multiRoll mode 4 (r16)
-          var np = 0; var sx = 0.0; var sy = 0.0
-          var i = 0
-          while (i < sp.w) {
-            val xi = end - i
-            val yi = xi - sp.lagK
-            if (yi >= start && !nul(xi) && !nul(yi)) { np += 1; sx += at(xi); sy += at(yi) }
-            i += 1
-          }
-          val nd = np.toDouble
-          val mx = sx / nd
-          val my = sy / nd
-          var sxxc = 0.0; var syyc = 0.0; var sxyc = 0.0
-          i = 0
-          while (i < sp.w) {
-            val xi = end - i
-            val yi = xi - sp.lagK
-            if (yi >= start && !nul(xi) && !nul(yi)) {
-              val dx = at(xi) - mx
-              val dy = at(yi) - my
-              sxxc += dx * dx; syyc += dy * dy; sxyc += dx * dy
-            }
-            i += 1
-          }
-          val r = sxyc / math.sqrt(sxxc * syyc)
-          out(o) = if (np >= sp.w) D(r) else null
-          o += 1
-        case 6 => // rolling cross-correlation col[colIdx] vs col[lagK]
-          val c2 = sp.lagK
-          @inline def nul2(i: Int): Boolean = java.lang.Double.isNaN(xs(i * arity + c2))
-          @inline def at2(i: Int): Double = xs(i * arity + c2)
-          // shifted Pearson — see multiRoll mode 6 (r16)
-          var np = 0; var sx = 0.0; var sy = 0.0
-          var i = 0
-          while (i < sp.w) {
-            val xi = end - i
-            if (xi >= start && !nul(xi) && !nul2(xi)) { np += 1; sx += at(xi); sy += at2(xi) }
-            i += 1
-          }
-          val nd = np.toDouble
-          val mx = sx / nd
-          val my = sy / nd
-          var sxxc = 0.0; var syyc = 0.0; var sxyc = 0.0
-          i = 0
-          while (i < sp.w) {
-            val xi = end - i
-            if (xi >= start && !nul(xi) && !nul2(xi)) {
-              val dx = at(xi) - mx
-              val dy = at2(xi) - my
-              sxxc += dx * dx; syyc += dy * dy; sxyc += dx * dy
-            }
-            i += 1
-          }
-          val r = sxyc / math.sqrt(sxxc * syyc)
-          out(o) = if (np >= sp.w) D(r) else null
-          o += 1
-        case _ => // mode 5: skew + kurtosis, weights = momentCoefs(w)
-          // centered power sums — see multiRoll mode 5 (r16)
           var s1 = 0.0; var cnt = 0; var i = end
           while (i >= start) { if (!nul(i)) { s1 += at(i); cnt += 1 }; i -= 1 }
           if (cnt >= sp.w) {
@@ -1006,62 +823,13 @@ object KernelRuntime {
     -h + 0.0
   }
 
-  /** See [[StlConvKernel]]: fixed-coefficient convolution over a full
-    * sliding frame — Σᵢ coefs(i)·xs(i), left-fold starting from the
-    * i = 0 TERM (not 0.0 — preserves the Column `reduceLeft` bit
-    * pattern including the −0.0 corner). A clipped edge frame
-    * (size ≠ taps) or a null element yields null, matching the
-    * declarative lag/lead chain's null propagation.
-    */
-  def stlConv(xs: ArrayData, coefs: Array[Double]): java.lang.Double = {
-    val n = xs.numElements()
-    if (n != coefs.length || xs.isNullAt(0)) return null
-    var acc = coefs(0) * xs.getDouble(0)
-    var i = 1
-    while (i < n) {
-      if (xs.isNullAt(i)) return null
-      acc = acc + coefs(i) * xs.getDouble(i)
-      i += 1
-    }
-    D(acc)
-  }
-
-  /** See [[StlLoessFitKernel]]: the weighted degree-1 local fit at the
-    * frame center from five simultaneous left-folds over [ρ, v] pairs.
-    * Term arithmetic replicates the Column form exactly — each term is
-    * wₖ(i)·ρ or wₖ(i)·(ρ·v) (that grouping), folds start from the
-    * i = 0 term, and the fit is (S2·T0 − S1·T1)/(S0·S2 − S1²) with a
-    * null verdict on a zero denominator or any clipped/null input.
-    */
-  def stlLoessFit(xs: ArrayData, w0: Array[Double], w1: Array[Double],
-      w2: Array[Double]): java.lang.Double = {
-    val n = xs.numElements()
-    if (n != w0.length) return null
-    var s0 = 0d; var s1 = 0d; var s2 = 0d; var t0 = 0d; var t1 = 0d
-    var i = 0
-    while (i < n) {
-      if (xs.isNullAt(i)) return null
-      val e = xs.getArray(i)
-      if (e.isNullAt(0) || e.isNullAt(1)) return null
-      val r = e.getDouble(0)
-      val rv = r * e.getDouble(1)
-      if (i == 0) {
-        s0 = w0(0) * r; s1 = w1(0) * r; s2 = w2(0) * r
-        t0 = w0(0) * rv; t1 = w1(0) * rv
-      } else {
-        s0 = s0 + w0(i) * r; s1 = s1 + w1(i) * r; s2 = s2 + w2(i) * r
-        t0 = t0 + w0(i) * rv; t1 = t1 + w1(i) * rv
-      }
-      i += 1
-    }
-    val den = s0 * s2 - s1 * s1
-    if (den == 0.0) null else D((s2 * t0 - s1 * t1) / den)
-  }
-
-  /** Flat-buffer twin of [[stlConv]] for [[StlConvAgg]] (r21): the
-    * IDENTICAL left-fold over a primitive double[] the aggregate
-    * buffered in frame order — n counts every frame row (clipped ⇒
-    * null); the caller has already nulled on a null element.
+  /** The fold of [[StlConvAgg]]: fixed-coefficient convolution over a
+    * full sliding frame — Σᵢ coefs(i)·xs(i), left-fold starting from
+    * the i = 0 TERM (not 0.0 — preserves the Column `reduceLeft` bit
+    * pattern including the −0.0 corner). `n` counts every frame row, so
+    * a clipped edge frame (n ≠ taps) yields null; the caller has
+    * already nulled on a null element — together the declarative
+    * lag/lead chain's null propagation.
     */
   def stlConvFlat(xs: Array[Double], n: Int, coefs: Array[Double]): java.lang.Double = {
     if (n != coefs.length) return null
@@ -1074,8 +842,13 @@ object KernelRuntime {
     D(acc)
   }
 
-  /** Flat-buffer twin of [[stlLoessFit]] for [[StlLoessFitAgg]] (r21):
-    * identical five-fold arithmetic over interleaved (ρ, v) pairs.
+  /** The fold of [[StlLoessFitAgg]]: the weighted degree-1 local fit at
+    * the frame center from five simultaneous left-folds over
+    * interleaved (ρ, v) pairs. Term arithmetic replicates the Column
+    * form exactly — each term is wₖ(i)·ρ or wₖ(i)·(ρ·v) (that grouping),
+    * folds start from the i = 0 term, and the fit is
+    * (S2·T0 − S1·T1)/(S0·S2 − S1²) with a null verdict on a zero
+    * denominator or a clipped frame.
     */
   def stlLoessFitFlat(xs: Array[Double], n: Int, w0: Array[Double],
       w1: Array[Double], w2: Array[Double]): java.lang.Double = {
@@ -1121,50 +894,17 @@ object KernelRuntime {
   def sortableBitsToDouble(k: Long): Double =
     java.lang.Double.longBitsToDouble(k ^ ((k >> 63) & java.lang.Long.MAX_VALUE))
 
-  /** See [[RollTheilSenKernel]]: lower-median pairwise slope of one
-    * FULL trailing window of [t, v] rows — all w(w−1)/2 slopes
+  /** The fold of [[RollTheilSenAgg]], also called per key by the
+    * streaming twin: lower-median pairwise slope of one FULL trailing
+    * window of interleaved (t, v) rows — all w(w−1)/2 slopes
     * (v_b − v_a)/(t_b − t_a) for a < b in time order, sorted, element
-    * ⌈m/2⌉ picked (the theilSen type-1 convention). The slope
-    * operands are the identical subtract/divide the oracle's
-    * lag-pair expressions compute; sorting a fixed multiset of
-    * doubles and picking a rank is engine-independent (ties yield
-    * equal values; a tied-timestamp pair divides to ±Infinity on both
-    * engines — the documented unique-ts contract makes it moot). A
-    * clipped edge frame (size ≠ w) or null element yields null.
-    */
-  def rollTheilSen(xs: ArrayData, w: Int): java.lang.Double = {
-    val n = xs.numElements()
-    if (n != w) return null
-    val ts = new Array[Double](w)
-    val vs = new Array[Double](w)
-    var i = 0
-    while (i < w) {
-      if (xs.isNullAt(i)) return null
-      val e = xs.getArray(i)
-      if (e.isNullAt(0) || e.isNullAt(1)) return null
-      ts(i) = e.getDouble(0); vs(i) = e.getDouble(1)
-      i += 1
-    }
-    val m = w * (w - 1) / 2
-    val slopes = new Array[Double](m)
-    var k = 0
-    var a = 0
-    while (a < w - 1) {
-      var b = a + 1
-      while (b < w) {
-        slopes(k) = (vs(b) - vs(a)) / (ts(b) - ts(a))
-        k += 1
-        b += 1
-      }
-      a += 1
-    }
-    java.util.Arrays.sort(slopes)
-    D(slopes((m + 1) / 2 - 1))
-  }
-
-  /** Flat-buffer twin of [[rollTheilSen]] for [[RollTheilSenAgg]]
-    * (r21): identical slope multiset, sort, and rank pick over
-    * interleaved (t, v) pairs the aggregate buffered in frame order.
+    * ⌈m/2⌉ picked (the theilSen type-1 convention). The slope operands
+    * are the identical subtract/divide the oracle's lag-pair
+    * expressions compute; sorting a fixed multiset of doubles and
+    * picking a rank is engine-independent (ties yield equal values; a
+    * tied-timestamp pair divides to ±Infinity on both engines — the
+    * documented unique-ts contract makes it moot). A clipped edge frame
+    * (n ≠ w) yields null.
     */
   def rollTheilSenFlat(xs: Array[Double], n: Int, w: Int): java.lang.Double = {
     if (n != w) return null

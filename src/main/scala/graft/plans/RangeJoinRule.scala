@@ -116,3 +116,14 @@ case class RewriteRangeJoin(bucketWidth: () => Option[Long]) extends Rule[Logica
     }
   }
 }
+
+object RewriteRangeJoin {
+  /** The session's bucket width: None when unset; a malformed or
+    * non-positive value fails fast instead of silently disabling the
+    * rewrite.
+    */
+  def bucketMicros(session: org.apache.spark.sql.SparkSession): Option[Long] =
+    session.conf.getOption("spark.graft.rangeJoin.bucketMicros")
+      .map(graft.GraftConf.parse("spark.graft.rangeJoin.bucketMicros", _,
+        "a positive integer number of microseconds")(_.toLongOption.filter(_ > 0)))
+}

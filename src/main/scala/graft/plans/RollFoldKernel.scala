@@ -1,199 +1,43 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
-
-/** Trailing lag-fold statistics in ONE pass over the row's sliding
-  * window array, replacing w distinct lag() frame processors plus wide
-  * coalesce-fold projections in WindowExec.
+/** One roll-family feature request for [[MultiRollAgg]]: `mode` selects
+  * the fold in [[KernelRuntime.multiRollFlat]], `colIdx` the source
+  * column inside each buffered frame row, and `(w, minP, lagK,
+  * weights)` carry the per-mode parameters.
   *
-  * Value parity: every mode replicates its Column-expression twin's
-  * fold ORDER — terms newest→oldest, left-associated — so results are
-  * bit-identical to the expression forms and to the generated DuckDB
-  * oracles (which mirror those same folds) on null-free input. Missing
-  * leading lags (group edges) contribute nothing, exactly like the
-  * expressions' coalesce(x, 0) terms; input arrays are oldest-first
-  * (frame `rowsBetween(-(depth-1), 0)` of collect_list). NULL values
-  * inside a window shift the collected array instead of holding a
-  * place — null-free input is the documented contract.
+  * Every fold replicates its Column-expression twin's ORDER — terms
+  * newest→oldest, left-associated — so results are bit-identical to
+  * the declarative forms and to the generated DuckDB oracles.
   *
-  * `right` = the row's own value (newest term), needed by zscore; pass
-  * any literal for other modes.
-  *
-  * Modes / outputs (array<double>, null elements where gated):
-  *  0 rollmean  → [mean]                 gate: cnt >= minP
-  *  1 rollstats → [min, max, std]        gates: cnt >= minP / max(minP,2)
-  *  2 zscore    → [(x-mean)/std]         gate: cnt >= w
-  *  3 ewmaTrunc → [num/den]              weights(i) = beta^i, no gate
-  *  4 autocorr  → [pearson r over pairs] gate: nPairs >= w; lagK set
+  * Modes / outputs (null elements where gated):
+  *  0 rollmean  → [mean]                  gate: cnt >= minP
+  *  1 rollstats → [min, max, std]         gates: cnt >= minP / max(minP,2)
+  *  2 zscore    → [(x-mean)/std]          gate: cnt >= w, current row present
+  *  3 ewmaTrunc → [num/den]               weights(i) = beta^i, no gate
+  *  4 autocorr  → [pearson r over pairs]  gate: nPairs >= w; lagK = the lag
+  *  5 moments   → [skew, excess kurtosis] gate: cnt >= w; weights = momentCoefs(w)
+  *  6 crosscorr → [pearson r of 2 columns] gate: nPairs >= w; lagK = the
+  *                SECOND column's index
   */
-case class RollFoldKernel(
-    left: Expression,
-    right: Expression,
+final case class RollSpecDef(
     mode: Int,
+    colIdx: Int,
     w: Int,
     minP: Int,
     lagK: Int,
-    weights: Array[Double])
-    extends BinaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean = true
-  private val D = java.lang.Double.valueOf(_: Double)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val xsAny = left.eval(input)
-    if (xsAny == null) return null
-    val xs = xsAny.asInstanceOf[ArrayData]
-    val n = xs.numElements()
-    // newest→oldest left folds (i = 0 is the current row)
-    mode match {
-      case 0 =>
-        var s = 0.0; var i = n - 1
-        while (i >= 0) { s += xs.getDouble(i); i -= 1 }
-        new GenericArrayData(Array[Any](if (n >= minP) D(s / n) else null))
-      case 1 =>
-        var s1 = 0.0; var s2 = 0.0; var mn = Double.MaxValue; var mx = Double.MinValue
-        var i = n - 1
-        while (i >= 0) {
-          val v = xs.getDouble(i)
-          s1 += v
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          i -= 1
-        }
-        // shifted two-pass variance — KernelRuntime mode 1 mirror
-        // (r16: s2 − s1²/n cancels catastrophically at large
-        // magnitudes; squares of deviations are non-negative)
-        val mean1 = s1 / n
-        var s2c = 0.0
-        i = n - 1
-        while (i >= 0) { val d = xs.getDouble(i) - mean1; s2c += d * d; i -= 1 }
-        val std = math.sqrt(s2c / (n - 1))
-        new GenericArrayData(Array[Any](
-          if (n >= minP) D(mn) else null,
-          if (n >= minP) D(mx) else null,
-          if (n >= math.max(minP, 2)) D(std) else null))
-      case 2 =>
-        var s1 = 0.0; var i = n - 1
-        while (i >= 0) { s1 += xs.getDouble(i); i -= 1 }
-        val out: Any =
-          if (n >= w) {
-            val rAny = right.eval(input)
-            if (rAny == null) null
-            else {
-              val x = rAny.asInstanceOf[Double]
-              val mean = s1 / n
-              var s2c = 0.0
-              i = n - 1
-              while (i >= 0) { val d = xs.getDouble(i) - mean; s2c += d * d; i -= 1 }
-              val std = math.sqrt(s2c / (n - 1))
-              D((x - mean) / std)
-            }
-          } else null
-        new GenericArrayData(Array[Any](out))
-      case 3 =>
-        var num = 0.0; var den = 0.0; var i = 0
-        while (i < w) {
-          val idx = n - 1 - i
-          if (idx >= 0) { val wi = weights(i); num += wi * xs.getDouble(idx); den += wi }
-          i += 1
-        }
-        new GenericArrayData(Array[Any](D(num / den)))
-      case 4 =>
-        // shifted Pearson — KernelRuntime mode 4 mirror (r16
-        // cancellation fix; same newest-first pair scan twice)
-        var np = 0; var sx = 0.0; var sy = 0.0
-        var i = 0
-        while (i < w) {
-          val xi = n - 1 - i
-          val yi = n - 1 - i - lagK
-          if (yi >= 0) { np += 1; sx += xs.getDouble(xi); sy += xs.getDouble(yi) }
-          i += 1
-        }
-        val nd = np.toDouble
-        val mx = sx / nd
-        val my = sy / nd
-        var sxxc = 0.0; var syyc = 0.0; var sxyc = 0.0
-        i = 0
-        while (i < w) {
-          val xi = n - 1 - i
-          val yi = n - 1 - i - lagK
-          if (yi >= 0) {
-            val dx = xs.getDouble(xi) - mx
-            val dy = xs.getDouble(yi) - my
-            sxxc += dx * dx; syyc += dy * dy; sxyc += dx * dy
-          }
-          i += 1
-        }
-        val r = sxyc / math.sqrt(sxxc * syyc)
-        new GenericArrayData(Array[Any](if (np >= w) D(r) else null))
-      case _ =>
-        // mode 5: sample skewness + excess kurtosis over the full
-        // window (gate n >= w, so n == w and the bias-correction
-        // coefficients are the compile-time constants in `weights`:
-        // [skewCoef, kurtA, kurtB] — shared with the SQL emitter)
-        // centered power sums — KernelRuntime mode 5 mirror (r16
-        // cancellation fix; d2·d for p=3, d2·d2 for p=4, matching the
-        // SQL emitter's multiply grouping)
-        var s1 = 0.0
-        var i = n - 1
-        while (i >= 0) { s1 += xs.getDouble(i); i -= 1 }
-        val out: (Any, Any) =
-          if (n >= w) {
-            val mean = s1 / n
-            var m2s = 0.0; var m3s = 0.0; var m4s = 0.0
-            i = n - 1
-            while (i >= 0) {
-              val d = xs.getDouble(i) - mean
-              val d2 = d * d
-              m2s += d2; m3s += d2 * d; m4s += d2 * d2
-              i -= 1
-            }
-            val m2 = m2s / n
-            val m3 = m3s / n
-            val m4 = m4s / n
-            val skew = weights(0) * (m3 / (m2 * math.sqrt(m2)))
-            val kurt = weights(1) * ((weights(2) * ((m4 / (m2 * m2)) - 3.0)) + 6.0)
-            (D(skew), D(kurt))
-          } else (null, null)
-        new GenericArrayData(Array[Any](out._1, out._2))
-    }
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RollFoldKernel =
-    copy(left = l, right = r)
+    weights: Array[Double]) {
+  /** Rows of history this spec needs (= its frame depth). */
+  def depth: Int = if (mode == 4) w + lagK else w
+  def nOut: Int = mode match { case 1 => 3; case 5 => 2; case _ => 1 }
 }
 
 object RollFoldKernel {
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-  import org.apache.spark.sql.functions.lit
-
-  def rollmean(xs: Column, w: Int, minP: Int): Column =
-    column(RollFoldKernel(expression(xs), expression(lit(0)), 0, w, minP, 0, Array.empty))
-  def rollstats(xs: Column, w: Int, minP: Int): Column =
-    column(RollFoldKernel(expression(xs), expression(lit(0)), 1, w, minP, 0, Array.empty))
-  def zscore(xs: Column, current: Column, w: Int): Column =
-    column(RollFoldKernel(expression(xs), expression(current), 2, w, w, 0, Array.empty))
-  def ewmaTrunc(xs: Column, k: Int, beta: Double): Column =
-    column(RollFoldKernel(expression(xs), expression(lit(0)), 3, k, 0, 0,
-      Array.tabulate(k)(i => math.pow(beta, i))))
-  def autocorr(xs: Column, w: Int, lagK: Int): Column =
-    column(RollFoldKernel(expression(xs), expression(lit(0)), 4, w, w, lagK, Array.empty))
-
-  /** Bias-correction constants for window length w, shared verbatim
-    * with OracleGen.momentsExprs.
+  /** Bias-correction constants of the rolling moments fold (mode 5)
+    * for window length w, shared verbatim with OracleGen.momentsExprs:
+    * [skewCoef, kurtA, kurtB].
     */
   def momentCoefs(w: Int): Array[Double] = Array(
     math.sqrt(w.toDouble * (w - 1)) / (w - 2),     // skew
     (w - 1).toDouble / ((w - 2) * (w - 3)),        // kurt outer
     (w + 1).toDouble)                              // kurt inner
-
-  def moments(xs: Column, w: Int): Column = {
-    require(w >= 4, s"rolling moments need w >= 4, got $w")
-    column(RollFoldKernel(expression(xs), expression(lit(0)), 5, w, w, 0, momentCoefs(w)))
-  }
 }

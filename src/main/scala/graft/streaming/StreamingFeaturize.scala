@@ -252,15 +252,14 @@ object StreamingFeaturize {
     * twin — per event, the lower-median pairwise slope of the trailing
     * `w` [t, v] rows, from a (w−1)-deep [ts, value] ring per key
     * (O(w) state, unbounded stream). BIT-identical to batch by
-    * construction: each full window is handed to the SAME
-    * [[graft.plans.KernelRuntime.rollTheilSen]] body the batch kernel
-    * compiles — one code path, one verdict. Null until the window
-    * fills (minPeriods = w), sortedStrict order contract as the other
-    * twins.
+    * construction: each full window is handed, as interleaved (t, v)
+    * pairs, to the SAME [[graft.plans.KernelRuntime.rollTheilSenFlat]]
+    * fold the batch window aggregate runs — one code path, one verdict.
+    * Null until the window fills (minPeriods = w), sortedStrict order
+    * contract as the other twins.
     */
   def streamingRollTheilSen(events: Dataset[Ev], w: Int): Dataset[RollSenOut] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -274,9 +273,8 @@ object StreamingFeaturize {
             val wv = (vs :+ e.value).takeRight(w)
             val sen =
               if (wt.size == w) {
-                val xs = new GenericArrayData(wt.indices.map(i =>
-                  new GenericArrayData(Array[Any](wt(i), wv(i)))).toArray[Any])
-                Option(graft.plans.KernelRuntime.rollTheilSen(xs, w)).map(_.doubleValue)
+                val xs = wt.indices.flatMap(i => Seq(wt(i), wv(i))).toArray
+                Option(graft.plans.KernelRuntime.rollTheilSenFlat(xs, w, w)).map(_.doubleValue)
               } else None
             ts = wt.takeRight(w - 1); vs = wv.takeRight(w - 1)
             RollSenOut(key, e.ts_us, e.value, sen)

@@ -49,126 +49,86 @@ object Featurize {
       weights: Array[Double] = Array.empty,
       src2: Option[String] = None)
 
-  /** Project a family of trailing roll features through ONE shared
-    * collect_list frame (widest depth over the requests, elements =
-    * array of every distinct source column) and ONE MultiRollKernel
-    * pass — a single window aggregation buffer for the whole family,
-    * however many (column, spec) pairs it holds. `extra` rides the same
-    * select so its window expressions land in the same Window operator.
+  /** Project a family of trailing roll features — and, from
+    * [[fusedWindowBlock]], trailing Taylor specs — as frame-fold window
+    * aggregates ([[graft.plans.MultiRollAgg]] /
+    * [[graft.plans.TaylorTrailingAgg]]): each aggregate's eval() IS the
+    * fold, so no frame array is ever built per row. When no request
+    * reads two columns, the rolls split into one aggregate per
+    * (column, depth), each buffering a single NaN-encoded column; a
+    * cross-column spec (mode 6) puts the whole family into ONE
+    * multi-column aggregate at the widest depth. Every aggregate shares
+    * the partition/order spec (frames differ per function, which
+    * WindowExec handles natively), and `extra` rides the same select,
+    * so the block plans ONE Window operator.
     */
   private def applyRollReqs(
       df: DataFrame,
       win: WindowSpec,
       reqs: Seq[RollReq],
-      extra: Seq[(String, Column)]): DataFrame = {
-    import graft.plans.{MultiRollKernel, RollSpecDef}
-    val colsUsed = (reqs.map(_.src) ++ reqs.flatMap(_.src2)).distinct
-    // Per-column BARE frames (plain collect_list(double) per (column,
-    // depth) — no per-row array allocation, the exact null contract of
-    // the original single-column kernels) whenever no request reads two
-    // columns at once; the shared WRAPPED array frame only when a
-    // cross-column spec (mode 6) forces it. r9 A/B at sf0.1 on
-    // ts_pipeline_multi (2 cols × 2 windows): the bare split measured
-    // faster than the wrapped frame (numbers in BENCH_NOTES.md r9) —
-    // per-element array headers cost more than the extra window
-    // aggregation buffers at small column counts. All frames ride the
-    // same Window operator either way.
-    // spark.graft.roll.bareSplit=false restores the wrapped frame (A/B
-    // escape hatch; SharedMultiFrameSpec pins value parity).
-    val splitOk = reqs.forall(_.src2.isEmpty) &&
-      df.sparkSession.conf.getOption("spark.graft.roll.bareSplit")
-        .orElse(sys.env.get("SPARK_GRAFT_BARE_SPLIT"))
-        .forall(_.toBoolean)
-    // r22: the frame-fold AGGREGATE form — the whole (collector frame →
-    // kernel projection) two-step as ONE window aggregate whose eval()
-    // is the fold (FrameAggKernels.MultiRollAgg). NaN-positional
-    // encoding = the wrapped frame's / the declarative lag folds' / the
-    // oracles' semantics (a dropped-null compacted frame reached
-    // further back past nulls; the lag/lead forms never did).
-    val useAgg = graft.plans.FrameAggKernels.aggEnabled(df.sparkSession)
-    val kernels: Seq[(Column, Seq[RollReq])] =
-      if (splitOk) {
-        colsUsed.flatMap { c =>
+      extra: Seq[(String, Column)],
+      taylors: Seq[TaylorBasis.Spec] = Nil): DataFrame = {
+    import graft.plans.{FrameAggKernels, RollSpecDef}
+    def frame(depth: Int): WindowSpec = win.rowsBetween(-(depth - 1), 0)
+    val rollKs: Seq[(Column, Seq[RollReq])] =
+      if (reqs.forall(_.src2.isEmpty)) {
+        reqs.map(_.src).distinct.flatMap { c =>
           val mine = reqs.filter(_.src == c)
           mine.groupBy(r => RollSpecDef(r.mode, 0, r.w, r.minP, r.lagK, r.weights).depth)
             .toSeq.sortBy(_._1).map { case (depth, rs) =>
               val specs = rs.map(r => RollSpecDef(r.mode, 0, r.w, r.minP, r.lagK, r.weights))
-              val frame = win.rowsBetween(-(depth - 1), 0)
-              if (useAgg)
-                (graft.plans.FrameAggKernels.multiRollAgg(Seq(col(c)), specs, depth)
-                  .over(frame), rs)
-              else {
-                val xs = graft.plans.FrameAggKernels
-                  .collectDoubles(col(c).cast("double"), depth)
-                  .over(frame)
-                (MultiRollKernel.ofBare(xs, specs), rs)
-              }
+              (FrameAggKernels.multiRollAgg(Seq(col(c)), specs, depth).over(frame(depth)), rs)
             }
         }
       } else {
+        val colsUsed = (reqs.map(_.src) ++ reqs.flatMap(_.src2)).distinct
         val specs = reqs.map { r =>
           // mode 6 (cross-corr) carries its second column's index in lagK
           val lk = r.src2.map(colsUsed.indexOf).getOrElse(r.lagK)
           RollSpecDef(r.mode, colsUsed.indexOf(r.src), r.w, r.minP, lk, r.weights)
         }
         val depth = specs.map(_.depth).max
-        val frame = win.rowsBetween(-(depth - 1), 0)
-        if (useAgg)
-          Seq((graft.plans.FrameAggKernels
-            .multiRollAgg(colsUsed.map(col), specs, depth).over(frame), reqs))
-        else {
-          // NaN → null slot: NaN-as-missing in every frame encoding (same
-          // contract as fusedWindowBlock's wrapped elem)
-          val xs = collect_list(array(colsUsed.map { c =>
-            val d = col(c).cast("double")
-            when(isnan(d), lit(null)).otherwise(d)
-          }: _*)).over(frame)
-          Seq((MultiRollKernel.of(xs, specs), reqs))
-        }
+        Seq((FrameAggKernels.multiRollAgg(colsUsed.map(col), specs, depth)
+          .over(frame(depth)), reqs))
       }
+    // trailing taylor: depth-(w+1) frame, see KernelRuntime.taylorFlat
+    val tayKs = taylors.map { t =>
+      val table = graft.plans.TaylorKernel.evaluatorFromSpec(t).table
+        .copy(frameLo = t.windowSize, nanNull = true)
+      FrameAggKernels.taylorTrailingAgg(col(t.column), table)
+        .over(win.rowsBetween(-t.windowSize, 0))
+    }
     // two selects: the kernel arrays materialize ONCE, then per-feature
     // element_at projections read them — same Window operator, and each
-    // kernel's O(specs × depth) fold runs once per row, not per feature
-    val rollCols = kernels.zipWithIndex.map { case ((k, _), i) => k.as(s"__roll$i") }
-    val withRoll = df.select(
-      col("*") +: (rollCols ++ extra.map { case (n, e) => e.as(n) }): _*)
-    val featProjs = kernels.zipWithIndex.flatMap { case ((_, rs), i) =>
+    // fold runs once per row, not per feature
+    val aggCols = rollKs.zipWithIndex.map { case ((k, _), i) => k.as(s"__roll$i") } ++
+      tayKs.zipWithIndex.map { case (k, i) => k.as(s"__tay$i") }
+    val withAgg = df.select(col("*") +:
+      (aggCols ++ extra.map { case (n, e) => e.as(n) }): _*)
+    val rollProjs = rollKs.zipWithIndex.flatMap { case ((_, rs), i) =>
       rs.flatMap(_.names).zipWithIndex.map { case (nm, slot) =>
         element_at(col(s"__roll$i"), slot + 1).as(nm)
       }
     }
-    withRoll.select(col("*") +: featProjs: _*)
-      .drop(kernels.indices.map(i => s"__roll$i"): _*)
+    val tayProjs = taylors.zipWithIndex.flatMap { case (t, i) =>
+      (0 to t.degree).map(d => element_at(col(s"__tay$i"), d + 1).as(t.featName(d)))
+    }
+    withAgg.select(col("*") +: (rollProjs ++ tayProjs): _*)
+      .drop(rollKs.indices.map(i => s"__roll$i") ++
+        taylors.indices.map(i => s"__tay$i"): _*)
   }
 
-  /** The whole fused window block through ONE shared collect_list frame:
-    * every roll-family request AND every Taylor spec reads the same
-    * `collect_list(array(cols))` window (depth = max past need, reach =
-    * max future need) — a single window aggregation buffer for the
-    * entire feature family, with `extra` (lags/leads) riding the same
-    * Window operator.
+  /** The fused window block of [[featurizeData]]: every roll-family
+    * request, every Taylor spec and `extra` (lags/leads) over one
+    * partition/order spec.
     *
-    * Null rows must keep their POSITION in the frame (a bare
-    * collect_list drops nulls and shifts everything after them), so the
-    * element encoding depends on how many source columns the block
-    * reads: several → WRAPPED `array(cols)` elements (array() is never
-    * dropped, null slot = null source value); exactly one → BARE
-    * doubles with null ENCODED as NaN (`coalesce(x, NaN)`), which the
-    * kernels decode back to null — identical positional semantics, no
-    * per-row array allocation (the r7 ts_pipeline regression). Either
-    * way the roll folds skip nulls like the coalesce+count expression
-    * forms, and a taylor branch touching a null emits a NULL
-    * coefficient exactly like the declarative lag/lead CASE form. (A
-    * genuine NaN VALUE in the source column is treated as missing — the
-    * reference is pandas, where NaN IS the missing value.) Centered
-    * taylor specs extend the frame `frameHi` rows into the future; the
-    * roll kernel is told how many future rows are present (min(rpos,
-    * frameHi)) so its trailing folds still end at the current row
-    * (KernelRuntime.multiRoll).
-    *
-    * Called with `taylors = Nil` this degrades to [[applyRollReqs]]'s
-    * bare/per-depth frames; with a single taylor spec and no rolls it
-    * keeps the dedicated bare-frame kernel (no wrap overhead).
+    * Rolls and TRAILING taylor specs fold in their own frame-fold
+    * aggregates ([[applyRollReqs]]). CENTERED taylor specs cannot: their
+    * branch select reads pos/rpos, which a frame aggregate cannot see,
+    * so they keep the collector + [[graft.plans.TaylorKernel]] two-step
+    * — a single spec through [[Taylor.kernelExprs]], several through
+    * [[sharedFrameBlock]]'s one shared frame — in a second Window
+    * operator that rides the same sort.
     */
   private[ts] def fusedWindowBlock(
       df: DataFrame,
@@ -176,115 +136,54 @@ object Featurize {
       reqs: Seq[RollReq],
       taylors: Seq[TaylorBasis.Spec],
       extra: Seq[(String, Column)]): DataFrame = {
-    import graft.plans.RollSpecDef
-    if (taylors.isEmpty) return applyRollReqs(df, win, reqs, extra)
     if (reqs.isEmpty && taylors.size == 1) {
       val t = taylors.head
       val feats = Taylor.kernelExprs(Seq(t.column), t.degree, Seq(t.windowSize),
         Seq(t.align), Seq(t.ewSpan), t.fillEdges, win)
       return df.select(col("*") +: (extra ++ feats).map { case (n, e) => e.as(n) }: _*)
     }
-    val useAgg = graft.plans.FrameAggKernels.aggEnabled(df.sparkSession)
-    val trailOnly = taylors.forall(_.align == "trailing")
-    if (useAgg && trailOnly) {
-      // r22 frame-fold aggregates: every roll request and every
-      // trailing taylor spec folds inside its OWN window aggregate
-      // (MultiRollAgg / TaylorTrailingAgg) — no shared frame array, no
-      // pos/cnt window functions, still ONE Window operator (all
-      // aggregates share the partition/order spec; frames differ per
-      // function, which WindowExec handles natively).
-      val splitOk = reqs.forall(_.src2.isEmpty)
-      val rollKs: Seq[(Column, Seq[RollReq])] =
-        if (reqs.isEmpty) Nil
-        else if (splitOk) {
-          reqs.map(_.src).distinct.flatMap { c =>
-            val mine = reqs.filter(_.src == c)
-            mine.groupBy(r => RollSpecDef(r.mode, 0, r.w, r.minP, r.lagK, r.weights).depth)
-              .toSeq.sortBy(_._1).map { case (depth, rs) =>
-                val specs = rs.map(r => RollSpecDef(r.mode, 0, r.w, r.minP, r.lagK, r.weights))
-                (graft.plans.FrameAggKernels.multiRollAgg(Seq(col(c)), specs, depth)
-                  .over(win.rowsBetween(-(depth - 1), 0)), rs)
-              }
-          }
-        } else {
-          val cu = (reqs.map(_.src) ++ reqs.flatMap(_.src2)).distinct
-          val specs = reqs.map { r =>
-            val lk = r.src2.map(cu.indexOf).getOrElse(r.lagK)
-            RollSpecDef(r.mode, cu.indexOf(r.src), r.w, r.minP, lk, r.weights)
-          }
-          val depth = specs.map(_.depth).max
-          Seq((graft.plans.FrameAggKernels.multiRollAgg(cu.map(col), specs, depth)
-            .over(win.rowsBetween(-(depth - 1), 0)), reqs))
-        }
-      val tayKs: Seq[Column] = taylors.map { t =>
-        val table = graft.plans.TaylorKernel.evaluatorFromSpec(t).table
-          .copy(frameLo = t.windowSize, nanNull = true)
-        graft.plans.FrameAggKernels.taylorTrailingAgg(col(t.column), table)
-          .over(win.rowsBetween(-t.windowSize, 0))
-      }
-      val aggCols = rollKs.zipWithIndex.map { case ((k, _), i) => k.as(s"__roll$i") } ++
-        tayKs.zipWithIndex.map { case (k, i) => k.as(s"__tay$i") }
-      val withAgg = df.select(col("*") +:
-        (aggCols ++ extra.map { case (n, e) => e.as(n) }): _*)
-      val rollProjs = rollKs.zipWithIndex.flatMap { case ((_, rs), i) =>
-        rs.flatMap(_.names).zipWithIndex.map { case (nm, slot) =>
-          element_at(col(s"__roll$i"), slot + 1).as(nm)
-        }
-      }
-      val tayProjs = taylors.zipWithIndex.flatMap { case (t, i) =>
-        (0 to t.degree).map(d => element_at(col(s"__tay$i"), d + 1).as(t.featName(d)))
-      }
-      return withAgg.select(col("*") +: (rollProjs ++ tayProjs): _*)
-        .drop(rollKs.indices.map(i => s"__roll$i") ++
-          taylors.indices.map(i => s"__tay$i"): _*)
-    }
-    if (useAgg && (reqs.nonEmpty || extra.nonEmpty)) {
-      // centered taylors present: the rolls (and lags/leads) still fold
-      // in their own trailing aggregates; only the centered taylors —
-      // whose branch select needs pos/rpos — ride the shared frame
-      val d1 = applyRollReqs(df, win, reqs, extra)
-      return fusedWindowBlock(d1, win, Nil, taylors, Nil)
-    }
-    sharedFrameBlock(df, win, reqs, taylors, extra)
+    if (taylors.forall(_.align == "trailing")) applyRollReqs(df, win, reqs, extra, taylors)
+    else if (reqs.nonEmpty || extra.nonEmpty)
+      fusedWindowBlock(applyRollReqs(df, win, reqs, extra), win, Nil, taylors, Nil)
+    else sharedFrameBlock(df, win, taylors)
   }
 
-  /** The pre-r22 shared-frame form: ONE collect frame (bare-NaN or
-    * wrapped) + pos/cnt feeds the MultiRoll and Taylor scalar kernels —
-    * still the only route for CENTERED taylor specs (their branch
-    * select reads pos/rpos, invisible to a frame aggregate) and the
-    * `spark.graft.frameAgg=false` A/B fallback.
+  /** Several taylor specs, at least one CENTERED, through ONE collect
+    * frame + pos/cnt feeding one [[graft.plans.TaylorKernel]] per spec:
+    * depth = the family's max past need, reach = its max future need —
+    * a single window aggregation buffer for the whole family.
+    *
+    * Null rows must keep their POSITION in the frame (a bare
+    * collect_list drops nulls and shifts everything after them), so the
+    * element encoding depends on how many source columns the specs
+    * read: several → WRAPPED `array(cols)` elements (array() is never
+    * dropped, null slot = null source value); exactly one → BARE
+    * doubles with null ENCODED as NaN (`coalesce(x, NaN)`), which the
+    * kernel decodes back to null — identical positional semantics, no
+    * per-row array allocation (the r7 ts_pipeline regression). Either
+    * way a taylor branch touching a null emits a NULL coefficient
+    * exactly like the declarative lag/lead CASE form. (A genuine NaN
+    * VALUE in the source column is treated as missing — the reference
+    * is pandas, where NaN IS the missing value.)
     */
   private def sharedFrameBlock(
       df: DataFrame,
       win: WindowSpec,
-      reqs: Seq[RollReq],
-      taylors: Seq[TaylorBasis.Spec],
-      extra: Seq[(String, Column)]): DataFrame = {
-    import graft.plans.{MultiRollKernel, RollSpecDef, TaylorKernel}
-    val colsUsed = (reqs.map(_.src) ++ reqs.flatMap(_.src2) ++ taylors.map(_.column)).distinct
-    val specs = reqs.map { r =>
-      val lk = r.src2.map(colsUsed.indexOf).getOrElse(r.lagK)
-      RollSpecDef(r.mode, colsUsed.indexOf(r.src), r.w, r.minP, lk, r.weights)
-    }
+      taylors: Seq[TaylorBasis.Spec]): DataFrame = {
+    import graft.plans.TaylorKernel
+    val colsUsed = taylors.map(_.column).distinct
     def tPast(t: TaylorBasis.Spec): Int =
       if (t.align == "trailing") t.windowSize - 1 else (t.windowSize - 1) / 2
     def tFut(t: TaylorBasis.Spec): Int = t.windowSize - 1 - tPast(t)
-    val frameLo = (specs.map(_.depth - 1) ++ taylors.map(tPast)).max
+    val frameLo = taylors.map(tPast).max
     val frameHi = taylors.map(tFut).max
     val needsCnt = frameHi > 0 || taylors.exists(_.needsCount)
-    // ONE source column → bare frame with null ENCODED as NaN before
-    // collect_list: rows keep their position (collect_list would drop a
-    // bare null) so the kernels see exactly the wrapped frame's
-    // positional windows, without paying a per-row-per-element array
-    // allocation (the r7 ts_pipeline regression — VERDICT r7 item 2).
     val bareNaN = colsUsed.size == 1
     // NaN-as-missing must hold in BOTH frame encodings (pandas
-    // semantics — NaN IS the missing value there): the bare frame
-    // encodes null AS NaN and its kernels treat NaN as missing, so the
-    // wrapped frame maps NaN TO null (its kernels treat null as
-    // missing). Without this, the same NaN-bearing input would fold
-    // NaN into multi-column pipelines but skip it in single-column
-    // ones (round-8 advisory).
+    // semantics): the bare frame encodes null AS NaN and its kernel
+    // treats NaN as missing, so the wrapped frame maps NaN TO null (its
+    // kernel treats null as missing) — the same NaN-bearing input gives
+    // the same answer in single- and multi-column pipelines.
     val elem =
       if (bareNaN) coalesce(col(colsUsed.head).cast("double"), lit(Double.NaN))
       else array(colsUsed.map { c =>
@@ -293,8 +192,8 @@ object Featurize {
       }: _*)
     // bare single-column frame: the primitive collector (elem is
     // coalesce(x, NaN) — never null, so nothing is dropped and rows
-    // keep their position exactly as before). Wrapped multi-column
-    // frames keep collect_list (array elements).
+    // keep their position). Wrapped multi-column frames keep
+    // collect_list (array elements).
     val frame =
       (if (bareNaN) graft.plans.FrameAggKernels.collectDoubles(elem, frameLo + frameHi + 1)
        else collect_list(elem)).over(win.rowsBetween(-frameLo, frameHi))
@@ -303,34 +202,23 @@ object Featurize {
       if (needsCnt)
         count(lit(1)).over(win.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
       else lit(-1L)
-    // stage A materializes frame/pos/cnt (+ extra) in the ONE Window
-    // operator; stage B runs each kernel ONCE on the materialized
-    // frame; stage C projects per-feature elements. Three selects so
-    // CollapseProject can't duplicate a kernel per output feature.
+    // stage A materializes frame/pos/cnt in the ONE Window operator;
+    // stage B runs each kernel ONCE on the materialized frame; stage C
+    // projects per-feature elements. Three selects so CollapseProject
+    // can't duplicate a kernel per output feature.
     val stageA = df.select(col("*") +:
-      (Seq(frame.as("__frame"), posC.as("__pos"), cntC.as("__cnt")) ++
-        extra.map { case (n, e) => e.as(n) }): _*)
-    val future: Column =
-      if (frameHi == 0) lit(0)
-      else least(col("__cnt") - 1L - col("__pos"), lit(frameHi.toLong)).cast("int")
-    val rollCol =
-      if (specs.isEmpty) Nil
-      else if (bareNaN) Seq(MultiRollKernel.ofBareNaN(col("__frame"), future, specs).as("__roll"))
-      else Seq(MultiRollKernel.of(col("__frame"), future, specs).as("__roll"))
+      Seq(frame.as("__frame"), posC.as("__pos"), cntC.as("__cnt")): _*)
     val tayCols = taylors.zipWithIndex.map { case (t, i) =>
       TaylorKernel.fromSpecShared(t, col("__frame"), col("__pos"), col("__cnt"),
         frameLo, if (bareNaN) -1 else colsUsed.indexOf(t.column),
         nanNull = bareNaN).as(s"__tay$i")
     }
-    val stageB = stageA.select(col("*") +: (rollCol ++ tayCols): _*)
-    val rollProjs = reqs.flatMap(_.names).zipWithIndex.map { case (nm, slot) =>
-      element_at(col("__roll"), slot + 1).as(nm)
-    }
+    val stageB = stageA.select(col("*") +: tayCols: _*)
     val tayProjs = taylors.zipWithIndex.flatMap { case (t, i) =>
       (0 to t.degree).map(d => element_at(col(s"__tay$i"), d + 1).as(t.featName(d)))
     }
-    stageB.select(col("*") +: (rollProjs ++ tayProjs): _*)
-      .drop("__frame", "__pos", "__cnt", "__roll")
+    stageB.select(col("*") +: tayProjs: _*)
+      .drop("__frame", "__pos", "__cnt")
       .drop(taylors.indices.map(i => s"__tay$i"): _*)
   }
 
@@ -380,10 +268,9 @@ object Featurize {
       useKernel: Boolean = true): FeatureResult = {
     val win = seriesWindow(groupCols, orderCols)
     if (useKernel) {
-      // ONE shared multi-column frame + one-pass fold kernel for every
-      // (column, window) pair (same newest→oldest fold order as the
-      // expression twin → bit-identical; nulls skipped per-fold ≡ the
-      // expression's coalesce(x,0) + count)
+      // one-pass fold aggregates for every (column, window) pair (same
+      // newest→oldest fold order as the expression twin → bit-identical;
+      // nulls skipped per-fold ≡ the expression's coalesce(x,0) + count)
       val reqs = for (c <- columns; w <- windowSizes)
         yield RollReq(Seq(s"${c}_rollmean_w$w"), c, mode = 0, w = w, minP = minPeriods.getOrElse(w))
       return FeatureResult(applyRollReqs(df, win, reqs, Nil), reqs.flatMap(_.names))
@@ -497,20 +384,12 @@ object Featurize {
       w: Int): FeatureResult = {
     val win = seriesWindow(groupCols, orderCols)
     val names = Seq(s"${c}_skew_w$w", s"${c}_kurt_w$w")
-    // r22 frame-fold aggregate: the moments fold runs inside the window
+    require(w >= 4, s"rolling moments need w >= 4, got $w")
+    // frame-fold aggregate: the moments fold runs inside the window
     // aggregate's eval() — no frame array (see FrameAggKernels)
-    val k =
-      if (graft.plans.FrameAggKernels.aggEnabled(df.sparkSession)) {
-        require(w >= 4, s"rolling moments need w >= 4, got $w")
-        graft.plans.FrameAggKernels.multiRollAgg(Seq(col(c)),
-          Seq(graft.plans.RollSpecDef(5, 0, w, w,
-            0, graft.plans.RollFoldKernel.momentCoefs(w))), w)
-          .over(win.rowsBetween(-(w - 1), 0))
-      } else {
-        val xs = graft.plans.FrameAggKernels.collectDoubles(col(c).cast("double"), w)
-          .over(win.rowsBetween(-(w - 1), 0))
-        graft.plans.RollFoldKernel.moments(xs, w)
-      }
+    val k = graft.plans.FrameAggKernels.multiRollAgg(Seq(col(c)),
+      Seq(graft.plans.RollSpecDef(5, 0, w, w, 0, graft.plans.RollFoldKernel.momentCoefs(w))), w)
+      .over(win.rowsBetween(-(w - 1), 0))
     FeatureResult(
       df.select(col("*"), element_at(k, 1).as(names(0)), element_at(k, 2).as(names(1))), names)
   }
@@ -531,17 +410,9 @@ object Featurize {
     val win = seriesWindow(groupCols, orderCols)
     if (useKernel) {
       val name = s"${c}_autocorr_l${lagK}_w$w"
-      // r22 frame-fold aggregate (A/B fallback: collector + kernel)
-      val k =
-        if (graft.plans.FrameAggKernels.aggEnabled(df.sparkSession))
-          graft.plans.FrameAggKernels.multiRollAgg(Seq(col(c)),
-            Seq(graft.plans.RollSpecDef(4, 0, w, w, lagK, Array.empty)), w + lagK)
-            .over(win.rowsBetween(-(w + lagK - 1), 0))
-        else {
-          val xs = graft.plans.FrameAggKernels.collectDoubles(col(c).cast("double"), w + lagK)
-            .over(win.rowsBetween(-(w + lagK - 1), 0))
-          graft.plans.RollFoldKernel.autocorr(xs, w, lagK)
-        }
+      val k = graft.plans.FrameAggKernels.multiRollAgg(Seq(col(c)),
+        Seq(graft.plans.RollSpecDef(4, 0, w, w, lagK, Array.empty)), w + lagK)
+        .over(win.rowsBetween(-(w + lagK - 1), 0))
       return FeatureResult(df.select(col("*"), element_at(k, 1).as(name)), Seq(name))
     }
     def x(i: Int): Column = if (i == 0) col(c) else lag(col(c), i).over(win)
@@ -570,9 +441,9 @@ object Featurize {
     * rows: Pearson r of (cx_t-i, cy_t-i) pairs, i = 0..w-1, five-sums
     * closed form with a fixed newest→oldest left fold — mirrored
     * exactly by OracleGen.crosscorrExpr. Null until the window holds
-    * `w` complete (both-non-null) pairs. Lives only on the fused
-    * multi-column kernel: the op inherently reads two columns from the
-    * same frame, the shape MultiRollKernel exists for.
+    * `w` complete (both-non-null) pairs. Lives only on the
+    * multi-column roll aggregate: the op inherently reads two columns
+    * from the same frame.
     */
   def crossCorr(
       df: DataFrame,
@@ -601,19 +472,11 @@ object Featurize {
     val win = seriesWindow(groupCols, orderCols)
     if (useKernel) {
       val name = s"${c}_zscore_w$w"
-      // r22 frame-fold aggregate: the current row is the positional
-      // frame's last element, so no separate current-value child is
-      // needed (A/B fallback: collector + kernel)
-      val k =
-        if (graft.plans.FrameAggKernels.aggEnabled(df.sparkSession))
-          graft.plans.FrameAggKernels.multiRollAgg(Seq(col(c)),
-            Seq(graft.plans.RollSpecDef(2, 0, w, w, 0, Array.empty)), w)
-            .over(win.rowsBetween(-(w - 1), 0))
-        else {
-          val xs = graft.plans.FrameAggKernels.collectDoubles(col(c).cast("double"), w)
-            .over(win.rowsBetween(-(w - 1), 0))
-          graft.plans.RollFoldKernel.zscore(xs, col(c).cast("double"), w)
-        }
+      // the current row is the positional frame's last element, so no
+      // separate current-value child is needed
+      val k = graft.plans.FrameAggKernels.multiRollAgg(Seq(col(c)),
+        Seq(graft.plans.RollSpecDef(2, 0, w, w, 0, Array.empty)), w)
+        .over(win.rowsBetween(-(w - 1), 0))
       return FeatureResult(df.select(col("*"), element_at(k, 1).as(name)), Seq(name))
     }
     def term(i: Int): Column = if (i == 0) col(c) else lag(col(c), i).over(win)

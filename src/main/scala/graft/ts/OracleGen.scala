@@ -91,7 +91,7 @@ object OracleGen {
     s"case when $n >= $w then $r end as ${c}_autocorr_l${lagK}_w$w"
   }
 
-  /** Mirrors Featurize.crossCorr (MultiRollKernel mode 6): five-sums
+  /** Mirrors Featurize.crossCorr (RollSpecDef mode 6): five-sums
     * Pearson r between two columns over the trailing w rows, same
     * newest→oldest left fold.
     */
@@ -118,7 +118,7 @@ object OracleGen {
 
   /** Mirrors Featurize.rollMoments: four power-sum folds (newest →
     * oldest, left-associated, like the kernel's loop), then the exact
-    * arithmetic step order of RollFoldKernel mode 5, with the SAME
+    * arithmetic step order of RollSpecDef mode 5, with the SAME
     * bias-correction constants (RollFoldKernel.momentCoefs).
     */
   def momentsExprs(c: String, w: Int, ov: String): Seq[String] = {

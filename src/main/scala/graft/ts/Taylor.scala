@@ -124,30 +124,26 @@ object Taylor {
     } yield Spec(c, taylorDegree, w, a, s, fillEdges)
     val posCol = row_number().over(win).cast("long") - 1
     val cntCol = if (specs.exists(_.needsCount)) count(lit(1)).over(cntWin) else lit(-1L)
-    // r22: trailing specs fold inside a frame aggregate (no frame
-    // array, no pos/cnt window functions — KernelRuntime.taylorFlat's
+    // trailing specs fold inside a frame aggregate (no frame array, no
+    // pos/cnt window functions — KernelRuntime.taylorFlat's
     // synthesized-position contract over a depth-(w+1) frame). Centered
     // specs keep the collector + kernel two-step: their branch select
     // reads pos/rpos, which a frame aggregate cannot see.
-    val useAgg = org.apache.spark.sql.SparkSession.active
     def kernelCol(spec: Spec): Column = {
       val wsize = spec.windowSize
-      if (spec.align == "trailing" &&
-          graft.plans.FrameAggKernels.aggEnabled(useAgg)) {
+      if (spec.align == "trailing") {
         val table = graft.plans.TaylorKernel.evaluatorFromSpec(spec).table
           .copy(frameLo = wsize, nanNull = true)
         return graft.plans.FrameAggKernels
           .taylorTrailingAgg(col(spec.column), table)
           .over(win.rowsBetween(-wsize, 0))
       }
-      val (lo, hi) =
-        if (spec.align == "trailing") (-(wsize - 1), 0)
-        else { val h = (wsize - 1) / 2; (-h, wsize - 1 - h) }
+      val h = (wsize - 1) / 2
       // primitive frame collector (r21): collect_list semantics (nulls
       // dropped, frame order) with zero boxing — see FrameAggKernels
       val xs = graft.plans.FrameAggKernels
         .collectDoubles(col(spec.column).cast("double"), wsize)
-        .over(win.rowsBetween(lo, hi))
+        .over(win.rowsBetween(-h, wsize - 1 - h))
       graft.plans.TaylorKernel.fromSpec(spec, xs, posCol, cntCol)
     }
     specs.flatMap { spec =>
@@ -155,14 +151,12 @@ object Taylor {
     }
   }
 
-  /** A multi-spec taylor family over ONE shared wrapped frame: every
-    * (column, window, align, span) pair reads the same
-    * `collect_list(array(cols))` window — depth = the family's max past
-    * need, reach = its max future need — via TaylorKernel.fromSpecShared
-    * (the MultiRollKernel pattern). One window aggregation buffer for
-    * the whole family instead of one collect_list frame per spec;
-    * Featurize.fusedWindowBlock builds the frame and can mix roll-family
-    * features into the same one.
+  /** A multi-spec taylor family through Featurize.fusedWindowBlock:
+    * trailing specs fold in their own frame aggregates; a family with
+    * centered specs reads ONE shared frame — depth = the family's max
+    * past need, reach = its max future need — via
+    * TaylorKernel.fromSpecShared, one window aggregation buffer for the
+    * whole family instead of one collect frame per spec.
     */
   def sharedKernelBlock(
       df: DataFrame,

@@ -364,23 +364,14 @@ object TimeOps {
     val win = Featurize.seriesWindow(groupCols, orderCols)
     val beta = 1.0 - alpha
     if (useKernel) {
-      // r22 frame-fold aggregate: the weighted fold runs inside the
-      // window aggregate's eval() over a NaN-positional buffer — beta^i
-      // weights address ROW positions and null terms drop from num AND
-      // den exactly like the declarative twin (the r21 collector form
-      // was compacted instead, with a null-free-input contract).
-      // A/B fallback (spark.graft.frameAgg=false): collector + kernel.
-      val ker =
-        if (graft.plans.FrameAggKernels.aggEnabled(df.sparkSession))
-          graft.plans.FrameAggKernels.multiRollAgg(Seq(col(valueCol)),
-            Seq(graft.plans.RollSpecDef(3, 0, k, 0, 0,
-              Array.tabulate(k)(i => math.pow(beta, i)))), k)
-            .over(win.rowsBetween(-(k - 1), 0))
-        else {
-          val xs = graft.plans.FrameAggKernels.collectDoubles(col(valueCol).cast("double"), k)
-            .over(win.rowsBetween(-(k - 1), 0))
-          graft.plans.RollFoldKernel.ewmaTrunc(xs, k, beta)
-        }
+      // frame-fold aggregate: the weighted fold runs inside the window
+      // aggregate's eval() over a NaN-positional buffer — beta^i weights
+      // address ROW positions and null terms drop from num AND den
+      // exactly like the declarative twin
+      val ker = graft.plans.FrameAggKernels.multiRollAgg(Seq(col(valueCol)),
+        Seq(graft.plans.RollSpecDef(3, 0, k, 0, 0,
+          Array.tabulate(k)(i => math.pow(beta, i)))), k)
+        .over(win.rowsBetween(-(k - 1), 0))
       return df.select(col("*"), element_at(ker, 1).as(out))
     }
     def term(i: Int): Column = if (i == 0) col(valueCol) else lag(col(valueCol), i).over(win)
@@ -1065,9 +1056,9 @@ object TimeOps {
     * FEATURE (where [[theilSen]] fits the whole series once, this is
     * its windowed sibling for featurization: one robust slope per
     * observation, immune to a spike that would swing a rolling OLS).
-    * Evaluated by [[graft.plans.RollTheilSenKernel]] over ONE bounded
-    * sliding collect_list frame of [t, v] rows — w(w−1)/2 slopes +
-    * an in-kernel rank pick per row, instead of ~91 lag-pair window
+    * Evaluated by [[graft.plans.RollTheilSenAgg]] inside ONE bounded
+    * sliding window frame of [t, v] rows — w(w−1)/2 slopes + an
+    * in-aggregate rank pick per row, instead of ~91 lag-pair window
     * expressions; the oracle unrolls exactly those lag pairs and
     * sorts the identical double multiset. Rows before the window
     * fills emit null (the rollmean minP = w convention). Timestamps
@@ -1088,8 +1079,8 @@ object TimeOps {
     df.withColumn(out,
       // the slope pick IS the window aggregate (r21): one primitive
       // (t, v) frame buffer, eval = slopes + sort + rank — no boxed
-      // collect_list, no pair-array rows (verdict parity structural;
-      // RollTheilSenSpec pins aggregate ≡ scalar kernel)
+      // collect_list, no pair-array rows (RollTheilSenSpec pins it
+      // against a brute-force slope, nulls and clipped frames included)
       graft.plans.FrameAggKernels.rollTheilSen(
         col(tsCol).cast("double"), col(valueCol).cast("double"), w).over(win))
   }
@@ -2803,16 +2794,6 @@ object TimeOps {
       .withColumn("drawdown", col("peak") - col(valueCol))
   }
 
-  /** Rolling exact order statistics (q1 / median / q3) over a trailing
-    * w-row window — the pandas `rolling(w).median()/quantile()` family
-    * via per-row sorted picks: collect the window into an array, sort,
-    * index at rank ceil(p·w) (the q_quantiles_approx disc convention).
-    * Emitted only when the window holds w non-null values (pandas
-    * min_periods=w); pure element PICKS, no arithmetic → bit-exact
-    * cross-engine. O(w log w) per row — fine for feature windows
-    * (w ≤ ~100); for large w use approx_percentile over the window.
-    * One exchange on the series key.
-    */
   /** Hampel filter: the standard rolling-median outlier REPAIR pass
     * run before featurization (detect a spike against the centered
     * window's median ± 3·1.4826·MAD, replace it with the median; a
@@ -2841,40 +2822,19 @@ object TimeOps {
     val w = 2 * k + 1
     val win = Featurize.seriesWindow(groupCols, orderCols).rowsBetween(-k, k)
     val withC = df.withColumn("__c", floor(col(valueCol) * scale + lit(0.5)).cast("long"))
-    // r22 frame-fold aggregate: [median, MAD] in ONE aggregate eval —
-    // the former shape materialized the sorted frame per row AND paid a
-    // per-row transform + array_sort for the MAD
-    // (spark.graft.frameAgg=false restores it for A/B). get()-style
-    // null when the window holds ≤ k values, exactly like the old
-    // out-of-bounds picks.
-    val withMad =
-      if (graft.plans.FrameAggKernels.aggEnabled(df.sparkSession)) {
-        withC
-          .withColumn("__cnt", count(col("__c")).over(win))
-          .withColumn("__mm",
-            graft.plans.FrameAggKernels.hampelMedMadAgg(col("__c"), k).over(win))
-          .withColumn("__med", element_at(col("__mm"), 1))
-          .withColumn("__dev", abs(col("__c") - col("__med")))
-          .withColumn("__mad", element_at(col("__mm"), 2))
-          .drop("__mm")
-      } else {
-        val withArr = withC
-          .withColumn("__cnt", count(col("__c")).over(win))
-          // one primitive collect+sort pass (r21) — replaces
-          // sort_array(collect_list(__c)): same null-dropped long multiset,
-          // same ascending order (long sort is unambiguous)
-          .withColumn("__arr", graft.plans.FrameAggKernels
-            .collectSortedLongs(col("__c"), w).over(win))
-        // get() (0-based, null out of bounds), NOT element_at: under ANSI
-        // a series shorter than k+1 rows would THROW on its edge windows
-        // before the cnt gate ever applies (element_at is eager per row)
-        withArr
-          .withColumn("__med", get(col("__arr"), lit(k)))
-          .withColumn("__dev", abs(col("__c") - col("__med")))
-          .withColumn("__mad",
-            get(array_sort(transform(col("__arr"), x => abs(x - col("__med")))), lit(k)))
-          .drop("__arr")
-      }
+    // frame-fold aggregate: [median, MAD] in ONE aggregate eval — no
+    // sorted frame array per row, no per-row transform + array_sort for
+    // the MAD. get()-style null when the window holds ≤ k values (an
+    // eager element_at would THROW under ANSI on a short series' edge
+    // windows before the cnt gate applies).
+    val withMad = withC
+      .withColumn("__cnt", count(col("__c")).over(win))
+      .withColumn("__mm",
+        graft.plans.FrameAggKernels.hampelMedMadAgg(col("__c"), k).over(win))
+      .withColumn("__med", element_at(col("__mm"), 1))
+      .withColumn("__dev", abs(col("__c") - col("__med")))
+      .withColumn("__mad", element_at(col("__mm"), 2))
+      .drop("__mm")
     val isOut = col("__cnt") === w &&
       col("__dev") * lit(10000L) > col("__mad") * lit(44478L)
     withMad
@@ -2882,9 +2842,19 @@ object TimeOps {
       .withColumn(out,
         when(isOut, col("__med").cast("double") / scale)
           .otherwise(col(valueCol).cast("double")))
-      .drop("__c", "__cnt", "__arr", "__med", "__dev", "__mad")
+      .drop("__c", "__cnt", "__med", "__dev", "__mad")
   }
 
+  /** Rolling exact order statistics (q1 / median / q3) over a trailing
+    * w-row window — the pandas `rolling(w).median()/quantile()` family
+    * via per-row sorted picks: collect the window into an array, sort,
+    * index at rank ceil(p·w) (the q_quantiles_approx disc convention).
+    * Emitted only when the window holds w non-null values (pandas
+    * min_periods=w); pure element PICKS, no arithmetic → bit-exact
+    * cross-engine. O(w log w) per row — fine for feature windows
+    * (w ≤ ~100); for large w use approx_percentile over the window.
+    * One exchange on the series key.
+    */
   def rollQuantiles(
       df: DataFrame,
       valueCol: String,
@@ -2898,17 +2868,15 @@ object TimeOps {
     def rank(p: Double): Int = math.ceil(p * w).toInt
     val ranks = Seq(rank(0.25), rank(0.5), rank(0.75))
     val names = Seq(s"${valueCol}_q1_w$w", s"${valueCol}_med_w$w", s"${valueCol}_q3_w$w")
-    // r22 frame-fold aggregate for double inputs: all three rank picks
-    // in ONE aggregate eval over a primitive sort — the sorted frame
-    // array is never materialized per row (frameAgg=false restores the
-    // r21 collectSortedDoubles + element_at two-step). Arrays.sort is
-    // the same -0.0 < 0.0 < NaN total order sort_array applies (pinned
-    // against the running engine by FrameCollectSpec's explicit
-    // [0.0, -0.0] case — an r22 ADVICE claim to the contrary did not
-    // reproduce), and collect_list's null-dropping is replicated;
-    // other input types keep the generic two-step.
-    if (df.schema(valueCol).dataType == org.apache.spark.sql.types.DoubleType &&
-        graft.plans.FrameAggKernels.aggEnabled(df.sparkSession)) {
+    // frame-fold aggregate for double inputs: all three rank picks in
+    // ONE aggregate eval over a primitive sort — the sorted frame array
+    // is never materialized per row. Arrays.sort is the same
+    // -0.0 < 0.0 < NaN total order sort_array applies (pinned against
+    // the running engine by FrameCollectSpec's sortedPicksAgg cases,
+    // including an explicit [0.0, -0.0] frame), and collect_list's
+    // null-dropping is replicated; other input types keep the generic
+    // sort_array(collect_list) two-step.
+    if (df.schema(valueCol).dataType == org.apache.spark.sql.types.DoubleType) {
       val full = col("__cnt") === w
       return df
         .withColumn("__cnt", count(v).over(win))
@@ -2919,13 +2887,9 @@ object TimeOps {
         .withColumn(names(2), when(full, element_at(col("__qs"), 3)))
         .drop("__cnt", "__qs")
     }
-    val sortedArr =
-      if (df.schema(valueCol).dataType == org.apache.spark.sql.types.DoubleType)
-        graft.plans.FrameAggKernels.collectSortedDoubles(v, w).over(win)
-      else sort_array(collect_list(v).over(win))
     val withArr = df
       .withColumn("__cnt", count(v).over(win))
-      .withColumn("__arr", sortedArr)
+      .withColumn("__arr", sort_array(collect_list(v).over(win)))
     val full = col("__cnt") === w
     withArr
       .withColumn(names(0), when(full, element_at(col("__arr"), ranks(0))))

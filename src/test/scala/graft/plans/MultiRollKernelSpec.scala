@@ -4,9 +4,10 @@ import graft.SparkSpec
 import graft.ts.Featurize
 import org.apache.spark.sql.functions._
 
-/** Value parity of the fused multi-column kernel against the dedicated
-  * single-column kernels / expression forms, plus the scale property it
-  * exists for: ONE window aggregation buffer for the whole family.
+/** Value parity of the multi-column roll aggregate and the fused
+  * featurize rolls against the dedicated single-column aggregates and
+  * the declarative expression forms, plus the plan shape of a
+  * multi-column roll family: every fold aggregate on ONE Window op.
   */
 class MultiRollKernelSpec extends SparkSpec {
   import spark.implicits._
@@ -53,74 +54,55 @@ class MultiRollKernelSpec extends SparkSpec {
   }
 
   test("a 2-column pipeline plans ONE Window, ONE exchange, per-column bare frames") {
-    // Default (r22): one frame-fold AGGREGATE per (column, depth)
-    // rollmean family — 4 here, zero frame arrays — all riding ONE
-    // Window op over ONE hash exchange. frameAgg=false restores the
-    // r21 per-(column, depth) primitive collectors (the measured r9
-    // bareSplit winner), and bareSplit=false under it the single
-    // wrapped array frame.
-    def shape(): (Int, Int, Int, Int) = {
-      val res = Featurize.featurizeData(df2, Seq("g"), Seq("t"), Seq(
-        Featurize.Lag(Seq("v", "u"), Seq(1, 3)),
-        Featurize.Rollmean(Seq("v", "u"), Seq(5, 9)),
-        Featurize.HorizonTargets(Seq("v"), Seq(2), "wide")))
-      val plan = res.df.queryExecution.executedPlan.toString
-      ("(?m)^\\s*(?:\\+- )?Window ".r.findAllIn(plan).length,
-        "doubleframecollect".r.findAllIn(plan).length +
-          "collect_list".r.findAllIn(plan).length,
-        "Exchange hashpartitioning".r.findAllIn(plan).length,
-        "multirollagg".r.findAllIn(plan).length)
-    }
-    val (windows, buffers, hashExchanges, aggs) = shape()
+    // one frame-fold AGGREGATE per (column, depth) rollmean family — 4
+    // here, each buffering one NaN-encoded column, zero frame arrays —
+    // all riding ONE Window op over ONE hash exchange
+    val res = Featurize.featurizeData(df2, Seq("g"), Seq("t"), Seq(
+      Featurize.Lag(Seq("v", "u"), Seq(1, 3)),
+      Featurize.Rollmean(Seq("v", "u"), Seq(5, 9)),
+      Featurize.HorizonTargets(Seq("v"), Seq(2), "wide")))
+    val plan = res.df.queryExecution.executedPlan.toString
+    val windows = "(?m)^\\s*(?:\\+- )?Window ".r.findAllIn(plan).length
+    val buffers = "doubleframecollect".r.findAllIn(plan).length +
+      "collect_list".r.findAllIn(plan).length
+    val hashExchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
+    val aggs = "multirollagg".r.findAllIn(plan).length
     assert(windows == 1, s"expected ONE Window op, got $windows")
     assert(buffers == 0, s"aggregate mode must plan ZERO frame arrays, got $buffers")
     assert(aggs == 4,
       s"expected one fold aggregate per (column, w) rollmean — 4 — got $aggs")
     assert(hashExchanges == 1, s"expected 1 hash exchange, got $hashExchanges")
-    spark.conf.set("spark.graft.frameAgg", "false")
-    try {
-      val (w1, b1, e1, a1) = shape()
-      assert(w1 == 1 && e1 == 1, s"collector mode must keep 1 Window/1 exchange, got $w1/$e1")
-      assert(b1 == 4 && a1 == 0,
-        s"frameAgg=false must restore one bare frame per (column, w) — 4 — got $b1/$a1")
-      spark.conf.set("spark.graft.roll.bareSplit", "false")
-      val (w2, b2, e2, _) = shape()
-      assert(w2 == 1 && e2 == 1, s"wrapped mode must keep 1 Window/1 exchange, got $w2/$e2")
-      assert(b2 == 1, s"bareSplit=false must restore ONE wrapped frame, got $b2")
-    } finally {
-      spark.conf.unset("spark.graft.roll.bareSplit")
-      spark.conf.unset("spark.graft.frameAgg")
-    }
   }
 
   test("mixed-mode specs against one frame equal their dedicated kernels") {
     val d = df2
-    val win = Featurize.seriesWindow(Seq("g"), Seq("t"))
-    // dedicated kernels, each with its own frame
-    val single = d.select(col("g"), col("t"),
-      element_at(RollFoldKernel.rollmean(
-        collect_list($"v".cast("double")).over(win.rowsBetween(-4, 0)), 5, 5), 1).as("m"),
-      element_at(RollFoldKernel.zscore(
-        collect_list($"u".cast("double")).over(win.rowsBetween(-7, 0)), $"u".cast("double"), 8), 1).as("z"),
-      element_at(RollFoldKernel.autocorr(
-        collect_list($"v".cast("double")).over(win.rowsBetween(-(6 + 2 - 1), 0)), 6, 2), 1).as("a"),
-      element_at(RollFoldKernel.moments(
-        collect_list($"u".cast("double")).over(win.rowsBetween(-9, 0)), 10), 1).as("sk"))
-    // one fused frame for all four
+    val (g, o) = (Seq("g"), Seq("t"))
+    val win = Featurize.seriesWindow(g, o)
+    // ONE two-column aggregate (v at index 0, u at 1) for all four specs
     val specs = Seq(
       RollSpecDef(0, 0, 5, 5, 0, Array.empty),
       RollSpecDef(2, 1, 8, 8, 0, Array.empty),
       RollSpecDef(4, 0, 6, 6, 2, Array.empty),
       RollSpecDef(5, 1, 10, 10, 0, RollFoldKernel.momentCoefs(10)))
     val depth = specs.map(_.depth).max
-    val xs = collect_list(array($"v".cast("double"), $"u".cast("double")))
-      .over(win.rowsBetween(-(depth - 1), 0))
-    val fused = d.select(col("g"), col("t"), MultiRollKernel.of(xs, specs).as("r"))
+    val fused = d.select(col("g"), col("t"),
+        FrameAggKernels.multiRollAgg(Seq($"v", $"u"), specs, depth)
+          .over(win.rowsBetween(-(depth - 1), 0)).as("r"))
       .select(col("g"), col("t"),
         element_at($"r", 1).as("m"), element_at($"r", 2).as("z"),
         element_at($"r", 3).as("a"), element_at($"r", 4).as("sk"))
-    val a = single.orderBy("g", "t").collect().toSeq
-    val b = fused.orderBy("g", "t").collect().toSeq
-    assert(a == b)
+    // each op on its own: its dedicated single-column aggregate, and its
+    // declarative form (rollMoments has none, so sk keeps its aggregate)
+    def single(useKernel: Boolean) = {
+      val m = Featurize.rollmean(d, Seq("v"), g, o, Seq(5), useKernel = useKernel).df
+      val z = Featurize.zscore(m, "u", g, o, 8, useKernel = useKernel).df
+      val a = Featurize.autocorr(z, "v", g, o, lagK = 2, w = 6, useKernel = useKernel).df
+      Featurize.rollMoments(a, "u", g, o, 10).df.select(col("g"), col("t"),
+        col("v_rollmean_w5").as("m"), col("u_zscore_w8").as("z"),
+        col("v_autocorr_l2_w6").as("a"), col("u_skew_w10").as("sk"))
+    }
+    val f = fused.orderBy("g", "t").collect().toSeq
+    assert(f == single(useKernel = true).orderBy("g", "t").collect().toSeq)
+    assert(f == single(useKernel = false).orderBy("g", "t").collect().toSeq)
   }
 }

@@ -52,6 +52,28 @@ class PlanAuditSpec extends SparkSpec {
     assert(aggs == 4, s"expected 4 roll fold aggregates, got $aggs")
   }
 
+  test("one path per frame kernel: trailing rolls/taylor plan no collector frame; centered taylor plans one") {
+    // trailing roll and taylor features fold inside their own window
+    // aggregates; only ts_pipeline_full's CENTERED taylor (branch select
+    // on pos/rpos) still collects a DoubleFrameCollect frame. Counted as
+    // DISTINCT window expressions: the taylor kernel reads its frame once
+    // per coefficient, and Spark plans each read as its own (identical)
+    // window expression.
+    def frames(q: String): Set[String] = {
+      val plan = graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+        .queryExecution.executedPlan.toString
+      spark.catalog.clearCache()
+      "doubleframecollect\\([^)]*\\) windowspecdefinition\\([^)]*\\)\\)".r
+        .findAllIn(plan).map(_.replaceAll("#\\d+", "#")).toSet
+    }
+    for (q <- Seq("ts_rollmean", "ts_taylor_trailing"))
+      assert(frames(q).isEmpty, s"$q must plan no collector frame: ${frames(q)}")
+    val full = frames("ts_pipeline_full")
+    assert(full.size == 1, s"ts_pipeline_full must plan ONE collector frame: $full")
+    assert(full.head.contains("specifiedwindowframe(RowFrame, -4, 4)"),
+      s"the one frame is the centered taylor's: $full")
+  }
+
   test("expanding OLS trend plans exactly one hash exchange (prefix sums share the sort)") {
     val df = (for (g <- 0 until 4; t <- 0 until 50) yield (g, t, math.sin(t * 0.1) + g))
       .toDF("g", "t", "v")

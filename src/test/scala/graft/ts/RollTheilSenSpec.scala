@@ -65,29 +65,45 @@ class RollTheilSenSpec extends SparkSpec {
       s"one WindowExec, no collect_list:\n${plan.take(2000)}")
   }
 
+  /** The brute-force lower-median pairwise slope of rows[t-w+1 .. t]:
+    * null on a clipped frame (t < w−1) or when any value in it is null.
+    */
+  private def bruteSlope(rows: Seq[(Long, Long, Option[Double])], t: Int): Option[Double] =
+    if (t < w - 1) None
+    else {
+      val win = rows.slice(t - w + 1, t + 1)
+      if (win.exists(_._3.isEmpty)) None
+      else {
+        val slopes = (for {
+          a <- 0 until w; b <- (a + 1) until w
+        } yield (win(b)._3.get - win(a)._3.get) / (win(b)._2 - win(a)._2).toDouble).sorted
+        Some(slopes((slopes.size + 1) / 2 - 1))
+      }
+    }
+
   test("frame-fold aggregate ≡ pair kernel: verdicts align on nulls and clipped frames") {
-    import graft.plans.{FrameAggKernels, StlKernels}
-    // null value at t = 20: every window containing it must be null on
-    // BOTH forms (pair kernel: null element; aggregate: nullSeen latch)
-    val df = (0 until 45).map { t =>
+    // null value at t = 20: every window containing it must be null,
+    // exactly like the brute-force pair loop (the aggregate latches the
+    // null; a clipped warm-up frame is null by size)
+    val rows = (0 until 45).map { t =>
       (1L, t.toLong * 1000L, if (t == 20) None else Some(2.0 * t + (t % 5)))
-    }.toDF("user_id", "ts_us", "value")
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy("ts_us").rowsBetween(-(w - 1), 0)
-    val got = df.select(col("ts_us"),
-        StlKernels.rollTheilSen(collect_list(
-          array(col("ts_us").cast("double"), col("value").cast("double"))).over(win), w).as("p"),
-        FrameAggKernels.rollTheilSen(
-          col("ts_us").cast("double"), col("value").cast("double"), w).over(win).as("q"))
+    }
+    val got = rows.toDF("user_id", "ts_us", "value")
+      .select(col("ts_us"), graft.plans.FrameAggKernels.rollTheilSen(
+        col("ts_us").cast("double"), col("value").cast("double"), w)
+        .over(org.apache.spark.sql.expressions.Window
+          .partitionBy("user_id").orderBy("ts_us").rowsBetween(-(w - 1), 0)).as("q"))
       .orderBy("ts_us").collect()
-    got.foreach { r =>
-      assert(r.isNullAt(1) == r.isNullAt(2), s"verdict mismatch: $r")
+    got.zipWithIndex.foreach { case (r, t) =>
+      val want = bruteSlope(rows, t)
+      assert(r.isNullAt(1) == want.isEmpty, s"t=$t verdict mismatch: $r vs $want")
       if (!r.isNullAt(1))
         assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
-          java.lang.Double.doubleToRawLongBits(r.getDouble(2)), s"value mismatch: $r")
+          java.lang.Double.doubleToRawLongBits(want.get), s"t=$t value mismatch: $r vs $want")
     }
-    val nullAt = got.map(r => (r.getLong(0) / 1000L).toInt -> r.isNullAt(2)).toMap
+    val nullAt = got.map(r => (r.getLong(0) / 1000L).toInt -> r.isNullAt(1)).toMap
     (20 until 20 + w).foreach(t => assert(nullAt(t), s"t=$t window holds the null"))
+    (0 until w - 1).foreach(t => assert(nullAt(t), s"t=$t clipped warm-up frame"))
     assert(!nullAt(19) && !nullAt(20 + w), "clean full windows stay non-null")
   }
 }
